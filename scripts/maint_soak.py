@@ -49,7 +49,7 @@ sys.path.insert(0, os.path.dirname(os.path.dirname(os.path.abspath(__file__))))
 
 from pyspark.sql import functions as F  # noqa: E402
 
-from sydradb_spark import manifest as mf  # noqa: E402
+from sydradb_spark import objectstore as obs  # noqa: E402
 from sydradb_spark import storage  # noqa: E402
 from sydradb_spark.ingest import _checkpoint_app_id, stream_points_sink  # noqa: E402
 from sydradb_spark.session import get_spark  # noqa: E402
@@ -206,7 +206,7 @@ def main() -> None:
         chunks 0..N committed => rows below lo + (N+1)*span durable)."""
         lows = []
         for app in app_ids:
-            n = mf.read_txn(table, app)
+            n = obs.read_txn(obs.LocalFSObjectStore(table), "", app)
             if n is None:
                 return None
             lows.append(n)
@@ -269,7 +269,7 @@ def main() -> None:
 
     # final maintenance pass quiesced, then the verdicts
     storage.optimize_partitions(spark, table, args.optimize_max_files)
-    mf.vacuum(table, keep_versions=2, min_age_seconds=0)
+    storage.vacuum_points(table, keep_versions=2, min_age_seconds=0)
 
     # --- verdict 1: multiset equality modulo the recorded deletions ---------
     del_pred = F.lit(False)
@@ -324,7 +324,8 @@ def main() -> None:
     # --- verdict 4: restore flip round-trips ----------------------------------
     final_snap = f"{args.work}/snap_final"
     storage.snapshot(table, final_snap)
-    pre_ledger = {app: mf.read_txn(table, app) for app in app_ids}
+    manifest = obs.LocalFSObjectStore(table)
+    pre_ledger = {app: obs.read_txn(manifest, "", app) for app in app_ids}
     storage.delete_where(
         spark, table, F.abs(F.xxhash64("series")) % 2 == 0,
         ts_min=int(lo), ts_max=int(hi),
@@ -332,12 +333,12 @@ def main() -> None:
     mangled_rows = storage.read_points(spark, table).count()
     storage.restore(final_snap, table)
     restored_rows = storage.read_points(spark, table).count()
-    post_ledger = {app: mf.read_txn(table, app) for app in app_ids}
+    post_ledger = {app: obs.read_txn(manifest, "", app) for app in app_ids}
     restore_ok = restored_rows == got_rows and post_ledger == pre_ledger
 
     # file counts per partition after the final optimize (small-file bound)
     per_part: dict[str, int] = {}
-    for f in mf.read_files(table):
+    for f in obs.read_files(manifest, ""):
         part = f.split("/", 1)[0]
         per_part[part] = per_part.get(part, 0) + 1
     max_files = max(per_part.values()) if per_part else 0

@@ -30,7 +30,8 @@ broken assertion.
 serialization under soak:
 
 - ``flock``      — the r12 shared/exclusive advisory lock (POSIX only);
-- ``manifested`` — the lock-free manifest-CAS protocol (local manifest);
+- ``manifested`` — the lock-free manifest-CAS protocol (manifest beside
+                   the data);
 - ``store``      — the same protocol with the manifest in an object store
                    (LocalFSObjectStore — conditional-PUT commit point, NO
                    flock anywhere), i.e. the s3:// deployment shape whose
@@ -316,10 +317,12 @@ def main() -> None:
     if manifested:
         # bound check over the MANIFEST (what readers see), then a final
         # min_age=0 vacuum must leave disk == manifest (orphans reclaimed)
-        from sydradb_spark.streaming.rollup_stream import _mf_files
+        from sydradb_spark import objectstore as obs
+        from sydradb_spark.streaming.rollup_stream import STORE_TABLE
 
+        manifest = obs.resolve(roll, store, STORE_TABLE)
         live_dirs = sorted(
-            n for n in (_mf_files(roll, store) or []) if n.startswith("b_")
+            n for n in obs.read_files(*manifest) if n.startswith("b_")
         )
         vacuum_rollup(roll, store, keep_versions=1, min_age_seconds=0)
         on_disk = {
@@ -327,7 +330,7 @@ def main() -> None:
             for p in Path(roll).iterdir()
             if p.is_dir() and p.name[0] in "bc" and p.name[1] == "_"
         }
-        manifest_now = set(_mf_files(roll, store) or [])
+        manifest_now = set(obs.read_files(*manifest))
         orphans_reclaimed = on_disk == manifest_now
     else:
         live_dirs = sorted(p.name for p in Path(roll).glob("b_*") if p.is_dir())

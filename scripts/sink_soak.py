@@ -32,9 +32,9 @@ properties are pinned at pytest scale in tests/test_streaming.py.
 
 ``--backend store`` (round 14, r13 verdict item 1): the table's manifest —
 init, every txn-ledgered batch commit, the maintenance vacuum, and every
-observability read — runs through the OBJECT-STORE protocol
-(``objectstore.LocalFSObjectStore``, conditional-PUT CAS; no link(2), no
-flock, no rename anywhere in the commit path), the exact deployment shape
+observability read — lives in a separate object store
+(``objectstore.LocalFSObjectStore`` under ``<work>/store``, not beside the
+data; no flock, no rename anywhere in the commit path), the deployment shape
 the r13 verdict found silently broken (``Path('s3a://…')`` committing the
 exactly-once ledger to a relative local junk dir). Same crash schedules,
 same four assertions.
@@ -63,7 +63,7 @@ sys.path.insert(0, os.path.dirname(os.path.dirname(os.path.abspath(__file__))))
 
 from pyspark.sql import functions as F  # noqa: E402
 
-from sydradb_spark import manifest as mf  # noqa: E402
+from sydradb_spark import objectstore as obs  # noqa: E402
 from sydradb_spark.ingest import _checkpoint_app_id, stream_points_sink  # noqa: E402
 from sydradb_spark.model import with_identity  # noqa: E402
 from sydradb_spark.storage import read_points  # noqa: E402
@@ -154,48 +154,28 @@ def main() -> None:
     table = f"{args.work}/tbl"
     ck = f"{args.work}/ck"
 
-    # backend seam (r14): store=None → local link-CAS manifest; else the
-    # objectstore conditional-PUT protocol over a real filesystem store
+    # manifest home: store=None → beside the table; else a
+    # conditional-PUT object store over a real filesystem
     store = None
     if args.backend == "store":
-        from sydradb_spark import objectstore as obs
-
         store = obs.LocalFSObjectStore(f"{args.work}/store")
+    from sydradb_spark.storage import POINTS_STORE_TABLE, vacuum_points
+
+    mstore, mkey = obs.resolve(table, store, POINTS_STORE_TABLE)
 
     def be_read_txn(app: str):
-        if store is None:
-            return mf.read_txn(table, app)
-        from sydradb_spark import objectstore as obs
-        from sydradb_spark.storage import POINTS_STORE_TABLE
-
-        return obs.read_txn(store, POINTS_STORE_TABLE, app)
+        return obs.read_txn(mstore, mkey, app)
 
     def be_version_count() -> int:
-        if store is None:
-            return len(glob.glob(f"{table}/_manifest/v*.json"))
-        from sydradb_spark.storage import POINTS_STORE_TABLE
-
-        return len(store.list(f"{POINTS_STORE_TABLE}/_manifest/v"))
+        return len(mstore.list(obs._mprefix(mkey) + "v"))
 
     def be_final_vacuum() -> None:
-        from sydradb_spark.storage import vacuum_points
-
         vacuum_points(
             table, store, keep_versions=args.keep_versions, min_age_seconds=0
         )
 
     def be_referenced() -> set:
-        referenced: set = set()
-        if store is None:
-            for vf in glob.glob(f"{table}/_manifest/v*.json"):
-                referenced.update(json.load(open(vf))["files"])
-            return referenced
-        from sydradb_spark.storage import POINTS_STORE_TABLE
-
-        pre = f"{POINTS_STORE_TABLE}/_manifest/"
-        for key in store.list(pre + "v"):
-            referenced.update(json.loads(store.get(key))["files"])
-        return referenced
+        return obs.retained_files(mstore, mkey)
 
     t0 = time.perf_counter()
     totals = [
@@ -239,28 +219,14 @@ def main() -> None:
                 f"injected mid-write crash at batch {txn[1]} of {txn[0]}"
             )
 
-    real_commit = mf.commit
-    real_store_commit = None
+    real_commit = obs.commit_cas
 
-    if store is None:
+    def crashing_commit(st, tbl, files=None, *, mutate=None, txn=None, **kw):
+        if tbl == mkey:
+            _mid_crash(txn)
+        return real_commit(st, tbl, files, mutate=mutate, txn=txn, **kw)
 
-        def crashing_commit(path, files=None, *, mutate=None, txn=None):
-            if path == table:
-                _mid_crash(txn)
-            return real_commit(path, files, mutate=mutate, txn=txn)
-
-        mf.commit = crashing_commit  # write_points resolves mf.commit lazily
-    else:
-        from sydradb_spark import objectstore as obs_mod
-
-        real_store_commit = obs_mod.commit_cas
-
-        def crashing_store_commit(st, tbl, files=None, *, mutate=None, txn=None, **kw):
-            if tbl == "points":
-                _mid_crash(txn)
-            return real_store_commit(st, tbl, files, mutate=mutate, txn=txn, **kw)
-
-        obs_mod.commit_cas = crashing_store_commit  # storage resolves lazily
+    obs.commit_cas = crashing_commit  # storage looks commit_cas up per call
 
     ledger_trace: dict = {app: [] for app in app_ids}
     version_counts: list[int] = []
@@ -367,12 +333,7 @@ def main() -> None:
         restarts_per_app = [results[k] for k in range(args.apps)]
     restarts = sum(restarts_per_app)
     t_stream = round(time.perf_counter() - t0, 1)
-    if store is None:
-        mf.commit = real_commit
-    else:
-        from sydradb_spark import objectstore as obs_mod
-
-        obs_mod.commit_cas = real_store_commit
+    obs.commit_cas = real_commit
 
     # --- assertion 1: exact multiset equality vs the batch twin -----------
     twin = (

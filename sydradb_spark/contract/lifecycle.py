@@ -728,7 +728,7 @@ def _optimize_small_files(spark: SparkSession, sf_dir: str) -> DataFrame:
     aggregate (vs the raw-points oracle) proves the merge is lossless, and
     the ``merged`` flag (files strictly decreased, computed from the
     manifest) proves it actually rewrote something."""
-    from sydradb_spark import manifest as mf
+    from sydradb_spark import objectstore
 
     table = _scratch(sf_dir, "optimize_table", fresh=True)
     pts = events_points(spark, sf_dir).where(F.col("ts") < D3)
@@ -743,9 +743,10 @@ def _optimize_small_files(spark: SparkSession, sf_dir: str) -> DataFrame:
         table,
         mode="append",
     )
-    before = len(mf.read_files(table))
+    manifest = objectstore.resolve(table, None, "")
+    before = len(objectstore.read_files(*manifest))
     storage.optimize_partitions(spark, table, max_files_per_partition=1)
-    after = len(mf.read_files(table))
+    after = len(objectstore.read_files(*manifest))
     return (
         storage.read_points(spark, table)
         .agg(

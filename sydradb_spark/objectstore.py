@@ -1,38 +1,40 @@
-"""Object-store-safe manifest commits: the same versioned-manifest protocol
-as ``sydradb_spark.manifest``, with the CAS commit point re-based from POSIX
-``link(2)`` onto an object store's native conditional write.
+"""Versioned table manifests committed through an object store's
+conditional write: the one commit protocol every table in the engine uses.
 
-``manifest.py`` commits by exclusively linking ``v{N+1}.json`` into place —
-atomic on local filesystems and NFS, but IMPOSSIBLE on S3/GCS/Azure (no
-link, no rename, no flock), which is where a 100-TB deployment actually
-keeps its table. All three major stores expose the one primitive the
-protocol needs — "create this key iff it does not exist", atomic
-server-side:
-
-- S3:    ``PutObject`` with ``If-None-Match: *`` (native conditional
-         writes; returns 412 when the key exists)
-- GCS:   upload with ``x-goog-if-generation-match: 0``
-- Azure: ``Put Blob`` with ``If-None-Match: *``
-
-That primitive is exactly what ``link(2)`` gave us locally, so the commit
-protocol — version race + re-read-and-retry + monotonic pointer hint —
-carries over UNCHANGED; only the CAS syscall is swapped. This module is the
-seam documented in SCALE_NOTES/DEPLOY.md (reference parallel: the
-single-node MANIFEST rename in ``src/sydra/storage/manifest.zig:18-57``,
-which has the same object-store problem).
-
-Layout (keys, mirroring the local manifest dir):
+The reference tracks live segments in a MANIFEST and swaps it atomically
+(``src/sydra/storage/manifest.zig:18-57``); the Spark translation is the
+idea a table format (Delta/Iceberg) uses — a JSON file list per version,
+published with an atomic create-if-absent:
 
     <table>/_manifest/v1.json    {"version": 1, "files": [...]}
     <table>/_manifest/v2.json
     <table>/_manifest/LATEST     "2"    (unconditional hint, never trusted)
 
-Concrete stores here: ``MemoryObjectStore`` (test fake with atomic
+The COMMIT POINT is "create ``v{N+1}.json`` iff it does not exist",
+atomic server-side on all three major stores:
+
+- S3:    ``PutObject`` with ``If-None-Match: *`` (412 when the key exists)
+- GCS:   upload with ``x-goog-if-generation-match: 0``
+- Azure: ``Put Blob`` with ``If-None-Match: *``
+- POSIX: write a temp file, then exclusive ``link(2)`` (EEXIST when taken;
+         atomic on local filesystems and NFS alike)
+
+Exactly one committer wins a version; a loser re-reads and retries, so a
+concurrent committer's files are never dropped, and a crash before the
+create leaves the table at the previous version. ``LATEST`` is a monotonic
+pointer HINT advanced after the create; readers take ``max(pointer, listed
+versions)``, so a stale or briefly regressed pointer is harmless. Old
+version docs stay until ``vacuum_versions`` (cheap time travel meanwhile).
+
+Concrete stores: ``MemoryObjectStore`` (test fake with atomic
 put-if-absent under a lock — models the server-side atomicity) and
-``LocalFSObjectStore`` (keys as files, put-if-absent via the same exclusive
-link — so the store-generic code path can run against a real filesystem).
-A production S3/GCS client needs only the four methods of the protocol; no
-other code changes.
+``LocalFSObjectStore`` (keys as files under a directory). A table written
+without a store is ``LocalFSObjectStore(<table dir>)`` under the empty
+table key (``resolve``), so its manifest is ``<table>/_manifest/``. A
+production S3/GCS/Azure client needs only the six methods of
+``ObjectStore``; no other code changes. Managed-table alternative: replace
+``commit_cas`` with a table format's conditional commit (its optimistic
+transaction log is this CAS, generalized).
 """
 
 from __future__ import annotations
@@ -44,13 +46,14 @@ from typing import Protocol
 
 
 class ObjectStore(Protocol):
-    """The five primitives the protocol needs. ``put_if_absent`` is the
+    """The six primitives the protocol needs. ``put_if_absent`` is the
     only one with atomicity requirements: it must create the key iff it
     does not already exist, atomically against concurrent creators (S3
     If-None-Match, GCS if-generation-match:0, Azure If-None-Match).
-    ``delete`` is used only by maintenance (``vacuum_versions``) — it was
-    implicit before r13, which meant a client implementing the documented
-    surface hit AttributeError at its first vacuum, not at type-check."""
+    ``delete`` and ``mtime`` are used only by maintenance
+    (``vacuum_versions``); ``mtime`` is the key's last-modified time in
+    epoch seconds (S3 ``LastModified``, GCS ``updated``, Azure
+    ``Last-Modified``), or None when the key does not exist."""
 
     def put_if_absent(self, key: str, data: bytes) -> bool: ...
 
@@ -62,6 +65,8 @@ class ObjectStore(Protocol):
 
     def delete(self, key: str) -> None: ...
 
+    def mtime(self, key: str) -> float | None: ...
+
 
 class MemoryObjectStore:
     """In-memory fake with object-store semantics: flat key space, atomic
@@ -71,6 +76,7 @@ class MemoryObjectStore:
 
     def __init__(self) -> None:
         self._data: dict[str, bytes] = {}
+        self._mtime: dict[str, float] = {}
         self._lock = threading.Lock()
         self.cas_attempts = 0  # diagnostics: total conditional PUTs
         self.cas_losses = 0  # ... and how many hit the 412 path
@@ -82,11 +88,13 @@ class MemoryObjectStore:
                 self.cas_losses += 1
                 return False
             self._data[key] = bytes(data)
+            self._mtime[key] = time.time()
             return True
 
     def put(self, key: str, data: bytes) -> None:
         with self._lock:
             self._data[key] = bytes(data)
+            self._mtime[key] = time.time()
 
     def get(self, key: str) -> bytes | None:
         with self._lock:
@@ -99,20 +107,24 @@ class MemoryObjectStore:
     def delete(self, key: str) -> None:
         with self._lock:
             self._data.pop(key, None)
+            self._mtime.pop(key, None)
+
+    def mtime(self, key: str) -> float | None:
+        with self._lock:
+            return self._mtime.get(key)
 
 
 class LocalFSObjectStore:
     """Object-store protocol over a local directory: keys are relative file
-    paths; ``put_if_absent`` is write-temp-then-exclusive-``link(2)`` — the
-    identical guarantee ``manifest._publish_version`` relies on, so the
-    store-generic protocol runs unmodified on POSIX/NFS too (one code path
-    to reason about, two deployment targets)."""
+    paths; ``put_if_absent`` is write-temp-then-exclusive-``link(2)``, so
+    the store-generic protocol runs unmodified on POSIX/NFS. Constructing
+    the store touches nothing on disk (a read of a missing table must not
+    create it); the first put creates the directories it needs."""
 
     def __init__(self, root: str) -> None:
         from pathlib import Path
 
         self.root = Path(root)
-        self.root.mkdir(parents=True, exist_ok=True)
 
     def _p(self, key: str):
         p = (self.root / key).resolve()
@@ -173,34 +185,80 @@ class LocalFSObjectStore:
     def delete(self, key: str) -> None:
         self._p(key).unlink(missing_ok=True)
 
+    def mtime(self, key: str) -> float | None:
+        try:
+            return self._p(key).stat().st_mtime
+        except FileNotFoundError:
+            return None
+
+
+def resolve(path: str, store: ObjectStore | None, key: str) -> tuple[ObjectStore, str]:
+    """The ``(store, table key)`` a table's manifest commits through. With
+    ``store=`` the manifest lives in that store under ``key``; without one
+    it lives beside the data, ``<path>/_manifest/``, through a
+    ``LocalFSObjectStore`` rooted at the table directory (empty key).
+
+    A URI ``path`` without a store is rejected loudly:
+    ``Path('s3a://b/t')`` is the RELATIVE local directory ``s3a:/b/t`` on
+    which mkdir/link all SUCCEED — the exactly-once ledger would land on
+    a local disk while the data goes to the store, silently voiding the
+    guarantee. ``file://`` URIs are local paths."""
+    from sydradb_spark.ingest import _posix_checkpoint_path
+
+    if store is None:
+        local = _posix_checkpoint_path(path)
+        if local is None:
+            raise ValueError(
+                f"the manifest of {path!r} cannot live beside its data: "
+                "link(2) has no object-store equivalent — pass store= (an "
+                "objectstore.ObjectStore scoped to this table) so the "
+                "manifest commits through the store's conditional PUT"
+            )
+        return LocalFSObjectStore(local), ""
+    return store, key
+
 
 def _mprefix(table: str) -> str:
-    return f"{table.rstrip('/')}/_manifest/"
+    return f"{table.rstrip('/')}/_manifest/".lstrip("/")
+
+
+def _listed_versions(store: ObjectStore, table: str) -> list[tuple[int, str]]:
+    """(version, key) of every listed version doc. Hidden temp files and
+    other keys under ``_manifest/`` (a legacy ``COMMIT_LOCK``) are skipped."""
+    pre = _mprefix(table)
+    out = []
+    for key in store.list(pre + "v"):
+        name = key[len(pre):]
+        if name.startswith("v") and name.endswith(".json"):
+            try:
+                out.append((int(name[1:-5]), key))
+            except ValueError:
+                pass
+    return out
 
 
 def latest_version(store: ObjectStore, table: str) -> int | None:
     """Newest committed version: max of the pointer hint and the LISTED
     version keys — a committed-but-unpointed version (crash or concurrent
-    winner between CAS and pointer advance) is still visible, and a stale
-    or regressed pointer is harmless. Object-store LIST is strongly
+    winner between CAS and pointer advance) is still visible, and a stale,
+    regressed or corrupt pointer is harmless. Object-store LIST is strongly
     consistent on S3 (since 2020)/GCS/Azure, so the listing is safe to
     trust as the source of truth."""
-    pre = _mprefix(table)
-    cands = []
-    raw = store.get(pre + "LATEST")
+    cands = [v for v, _ in _listed_versions(store, table)]
+    raw = store.get(_mprefix(table) + "LATEST")
     if raw is not None:
         try:
             cands.append(int(raw.decode().strip()))
         except ValueError:
             pass
-    for key in store.list(pre + "v"):
-        name = key[len(pre):]
-        if name.startswith("v") and name.endswith(".json"):
-            try:
-                cands.append(int(name[1:-5]))
-            except ValueError:
-                pass
     return max(cands) if cands else None
+
+
+def _read_doc(store: ObjectStore, table: str, version: int) -> dict:
+    raw = store.get(_mprefix(table) + f"v{version}.json")
+    if raw is None:
+        raise FileNotFoundError(f"missing manifest v{version} for {table!r}")
+    return json.loads(raw)
 
 
 def read_files(
@@ -209,49 +267,53 @@ def read_files(
     """Relative data-file paths of ``version`` (default: latest)."""
     v = version if version is not None else latest_version(store, table)
     if v is None:
-        raise FileNotFoundError(f"no manifest for {table}")
+        raise FileNotFoundError(f"no manifest for {table!r}")
     return list(_read_doc(store, table, v)["files"])
 
 
-def _read_doc(store: ObjectStore, table: str, version: int) -> dict:
-    raw = store.get(_mprefix(table) + f"v{version}.json")
-    if raw is None:
-        raise FileNotFoundError(f"missing manifest v{version} for {table}")
-    return json.loads(raw)
-
-
-def read_txn(store: ObjectStore, table: str, app_id: str) -> int | None:
-    """Highest committed txn version for ``app_id`` — the streaming sink's
-    replay guard, mirrored from ``manifest.read_txn`` so the exactly-once
-    contract carries to object-store deployments unchanged."""
-    v = latest_version(store, table)
-    if v is None:
-        return None
-    val = (_read_doc(store, table, v).get("txn") or {}).get(app_id)
-    return None if val is None else int(val)
-
-
-def read_ledger(store: ObjectStore, table: str) -> dict[str, int]:
-    """The full txn ledger of the latest version ({} when absent)."""
-    v = latest_version(store, table)
+def read_ledger(
+    store: ObjectStore, table: str, version: int | None = None
+) -> dict[str, int]:
+    """The txn ledger of ``version`` (default: latest; {} when absent)."""
+    v = version if version is not None else latest_version(store, table)
     if v is None:
         return {}
     return {k: int(t) for k, t in (_read_doc(store, table, v).get("txn") or {}).items()}
+
+
+def read_txn(store: ObjectStore, table: str, app_id: str) -> int | None:
+    """Highest transaction version committed for ``app_id`` (None when the
+    table has no manifest or the app has never committed). The txn ledger
+    is the streaming sink's replay guard — the Spark-side twin of the
+    reference's WAL highwater-mark replay cutoff (engine.zig:406-437): a
+    foreachBatch re-delivery of an already-durable ``batch_id`` is detected
+    here and becomes a no-op instead of a duplicate append."""
+    return read_ledger(store, table).get(app_id)
+
+
+def _publish(
+    store: ObjectStore, table: str, v: int, files: list[str], txn_map: dict[str, int]
+) -> bool:
+    """CAS: create ``v{v}.json`` iff no other committer already has."""
+    doc: dict = {"version": v, "files": sorted(files)}
+    if txn_map:
+        doc["txn"] = txn_map
+    return store.put_if_absent(_mprefix(table) + f"v{v}.json", json.dumps(doc).encode())
 
 
 def commit_replace(
     store: ObjectStore, table: str, files: list[str], txn_map: dict[str, int] | None
 ) -> int:
     """Full-replacement commit that also REPLACES the txn ledger — the
-    object-store twin of ``manifest.commit_replace`` (restore rewinds the
-    replay guard with the data). Offline maintenance: one attempt."""
+    restore path: rewinding a table to a snapshot must rewind the
+    replay guard WITH it, so a streaming batch delivered after the snapshot
+    re-appends into the restored table instead of no-op'ing against the
+    future ledger. Offline-maintenance context: one publish attempt."""
     cur = latest_version(store, table)
     v = 1 if cur is None else cur + 1
-    doc: dict = {"version": v, "files": sorted(files)}
-    if txn_map:
-        doc["txn"] = {k: int(t) for k, t in txn_map.items()}
-    if not store.put_if_absent(_mprefix(table) + f"v{v}.json", json.dumps(doc).encode()):
-        raise RuntimeError(f"commit_replace lost a version race at {table}")
+    txn = {k: int(t) for k, t in (txn_map or {}).items()}
+    if not _publish(store, table, v, files, txn):
+        raise RuntimeError(f"commit_replace lost a version race at {table!r}")
     _advance_pointer(store, table, v)
     return v
 
@@ -265,26 +327,30 @@ def commit_cas(
     txn: tuple[str, int] | None = None,
     max_retries: int = 16,
 ) -> int | None:
-    """CAS-with-retry commit against an object store — the multi-host,
-    no-locks protocol of ``manifest.commit_cas`` with conditional PUT as
-    the commit point.
+    """CAS-with-retry commit: the multi-host, no-locks protocol.
+
+    Two forms: ``files=`` is a full replacement (overwrite / fresh tables);
+    ``mutate(old_files) -> new_files`` is read-modify-write against the
+    list actually being replaced — appenders and compactors must use it,
+    since a list computed outside the commit lets a concurrent committer's
+    files be dropped (lost append). ``mutate`` may run once PER ATTEMPT
+    against a fresh list, so it must be a pure function of its input.
 
     Each attempt reads the current version, computes the new file list, and
     tries to create ``v{N+1}.json`` with put-if-absent; exactly one
-    committer can win a version, a loser re-reads and retries with linear
-    backoff, so a concurrent committer's files are never dropped.
-    ``mutate(old_files) -> new_files`` may run once PER ATTEMPT against a
-    fresh list — it must be a pure function of its input. There is no flock
-    fast path here: object stores have no locks, contention is absorbed
-    entirely by the retry loop (which is also why committers should batch —
-    one commit per micro-append multiplies the conditional-PUT rate).
+    committer wins a version, a loser re-reads and retries with linear
+    backoff. Contention is absorbed entirely by the retry loop, which is
+    why committers should batch — one commit per micro-append multiplies
+    the conditional-PUT rate.
 
-    ``txn=(app_id, txn_version)`` is the idempotency ledger of
-    ``manifest.commit_cas``: an attempt whose txn is already recorded
-    returns None without committing (re-checked inside the CAS loop)."""
+    ``txn=(app_id, txn_version)`` makes the commit idempotent per app: the
+    ledger (carried forward version to version) records the highest
+    committed txn_version per app_id, and an attempt whose txn_version is
+    already <= the ledger entry returns None WITHOUT committing — the
+    re-check happens inside the CAS loop, so a racing duplicate committer
+    loses either the version create or the ledger check."""
     if (files is None) == (mutate is None):
         raise ValueError("pass exactly one of files= or mutate=")
-    pre = _mprefix(table)
     for attempt in range(max_retries):
         cur = latest_version(store, table)
         v = 1 if cur is None else cur + 1
@@ -307,17 +373,13 @@ def commit_cas(
             if mutate is not None
             else list(files)  # type: ignore[arg-type]
         )
-        doc: dict = {"version": v, "files": sorted(new)}
-        if txn_map:
-            doc["txn"] = txn_map
-        payload = json.dumps(doc).encode()
-        if store.put_if_absent(pre + f"v{v}.json", payload):
+        if _publish(store, table, v, new, txn_map):
             _advance_pointer(store, table, v)
             return v
         time.sleep(0.005 * (attempt + 1))
     raise RuntimeError(
         f"manifest commit contention: lost the version race "
-        f"{max_retries} times at {table}"
+        f"{max_retries} times at {table!r}"
     )
 
 
@@ -338,25 +400,39 @@ def _advance_pointer(store: ObjectStore, table: str, v: int) -> None:
 
 
 def vacuum_versions(
-    store: ObjectStore, table: str, keep_versions: int = 2
+    store: ObjectStore, table: str, keep_versions: int = 2, min_age_seconds: int = 0
 ) -> list[str]:
-    """Delete manifest version keys older than the retained window (data
-    files are the caller's to garbage-collect against the retained file
-    sets, same contract as ``manifest.vacuum``). Object stores have no
-    mtime-rename races, but time-travel readers of dropped versions will
-    404 — size ``keep_versions`` to the reader horizon."""
+    """Delete version docs outside the retained window; returns the deleted
+    keys. Retained = the last ``keep_versions`` versions PLUS any version
+    younger than ``min_age_seconds`` (a time-travel reader holding version
+    N−k survives as long as it started within the window). Only versions
+    from this call's snapshot's past (<= latest) are pruned: a version
+    committed during the vacuum must survive, or LATEST would point at a
+    deleted doc and the table would be unreadable AND uncommittable. Data
+    files are the caller's to reclaim against ``retained_files``."""
     v = latest_version(store, table)
     if v is None:
         return []
-    pre = _mprefix(table)
+    now = time.time()
     removed = []
-    for key in store.list(pre + "v"):
-        name = key[len(pre):]
-        try:
-            kv = int(name[1:-5])
-        except ValueError:
+    for kv, key in _listed_versions(store, table):
+        if kv > v - keep_versions:
             continue
-        if kv <= v - keep_versions:
-            store.delete(key)
-            removed.append(key)
+        m = store.mtime(key)
+        if m is None or now - m < min_age_seconds:
+            continue  # young, or already pruned by a concurrent vacuum
+        store.delete(key)
+        removed.append(key)
     return sorted(removed)
+
+
+def retained_files(store: ObjectStore, table: str) -> set[str]:
+    """Every file any still-listed version references — the keep-set a
+    data vacuum reclaims against."""
+    kept: set[str] = set()
+    for kv, _ in _listed_versions(store, table):
+        try:
+            kept.update(_read_doc(store, table, kv)["files"])
+        except FileNotFoundError:
+            continue  # racing a concurrent vacuum
+    return kept

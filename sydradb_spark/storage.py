@@ -5,9 +5,11 @@ points by ts, split by UTC hour, write compressed segments + manifest entry.
 Spark-first translation:
 
 - ``write_points``: repartition by hour_bucket, sort within partitions by
-  (series_id, ts), ``partitionBy("hour_bucket")`` Parquet. Parquet row-group
-  min/max stats on (series_id, ts) replace the manifest; the partition
-  directory listing replaces manifest pruning.
+  (series_id, ts), ``partitionBy("hour_bucket")`` Parquet, then commit the
+  written file list as the next version of the table's manifest
+  (``sydradb_spark.objectstore``). Parquet row-group min/max stats on
+  (series_id, ts) replace the reference's per-segment ranges; the hour
+  partitions replace its manifest pruning.
 - ``hour_bucket_bounds``: the ONE rewrite Catalyst cannot do for us (SURVEY
   §4.1): derive hour_bucket partition predicates from ts predicates so a
   time-ranged query prunes partitions instead of scanning all of them.
@@ -25,6 +27,7 @@ from pathlib import Path
 from pyspark.sql import Column, DataFrame, SparkSession, Window
 from pyspark.sql import functions as F
 
+from sydradb_spark import objectstore
 from sydradb_spark.model import SECONDS_PER_HOUR
 
 POINT_COLS = ["series_id", "series", "tags", "ts", "value", "hour_bucket"]
@@ -42,88 +45,37 @@ def _posix_table_path(path: str) -> str | None:
     return _posix_checkpoint_path(path)
 
 
-def _require_posix(path: str, op: str) -> Path:
-    """Loud non-POSIX triage (VERDICT r13 item 1): ``Path('s3a://b/t')`` is
-    the RELATIVE local directory ``s3a:/b/t`` on which mkdir/rename/link all
-    SUCCEED — a POSIX-only operation fed a URI silently splits the table
-    across two filesystems instead of failing. Every Path/shutil-based
-    entry point triages here first."""
+def _root(path: str) -> str:
+    """Where the table's data files live: the local form of a plain or
+    file:// path, else the URI itself."""
+    return (_posix_table_path(path) or path).rstrip("/")
+
+
+def _data_files(path: str, spark: SparkSession | None = None) -> list[str]:
+    """Every hour-partition parquet file under ``path`` (relative paths),
+    listed locally or, for a URI location, through the Hadoop FS API. What
+    the first commit on a manifest-less table adopts, and what vacuum
+    reclaims from."""
     local = _posix_table_path(path)
-    if local is None:
-        raise ValueError(
-            f"{op} is a POSIX-filesystem operation and cannot run on "
-            f"{path!r}: pass store= (an objectstore.ObjectStore scoped to "
-            "this table) so the manifest commits through the store's "
-            "conditional PUT, and data operations route through the Hadoop "
-            "FS API"
+    if local is not None:
+        root = Path(local)
+        return sorted(
+            str(f.relative_to(root)) for f in root.glob("hour_bucket=*/*.parquet")
         )
-    return Path(local)
+    from sydradb_spark.util import hadoop_fs
 
-
-# --- points-manifest backend dispatch (r14, VERDICT r13 item 1) ---------------
-# The same two-backend seam the rollup table got in r13
-# (streaming/rollup_stream._mf_commit): store=None → the local link(2)-CAS
-# protocol (sydradb_spark.manifest, POSIX paths only — URIs rejected loudly
-# by manifest._root); store=<ObjectStore> → the conditional-PUT protocol
-# (sydradb_spark.objectstore) under the table key "points", with the DATA
-# files living wherever ``path`` points (local or any Hadoop-reachable URI).
-
-
-def _pm_has(path: str, store) -> bool:
-    if store is None:
-        from sydradb_spark import manifest as mf
-
-        return mf.has_manifest(path)
-    from sydradb_spark import objectstore as obs
-
-    return obs.latest_version(store, POINTS_STORE_TABLE) is not None
-
-
-def _pm_latest(path: str, store) -> int | None:
-    if store is None:
-        from sydradb_spark import manifest as mf
-
-        return mf.latest_version(path)
-    from sydradb_spark import objectstore as obs
-
-    return obs.latest_version(store, POINTS_STORE_TABLE)
-
-
-def _pm_files(path: str, store, version: int | None = None) -> list[str]:
-    if store is None:
-        from sydradb_spark import manifest as mf
-
-        return mf.read_files(path, version=version)
-    from sydradb_spark import objectstore as obs
-
-    return obs.read_files(store, POINTS_STORE_TABLE, version)
-
-
-def _pm_read_txn(path: str, store, app_id: str) -> int | None:
-    if store is None:
-        from sydradb_spark import manifest as mf
-
-        return mf.read_txn(path, app_id)
-    from sydradb_spark import objectstore as obs
-
-    return obs.read_txn(store, POINTS_STORE_TABLE, app_id)
-
-
-def _pm_commit(
-    path: str,
-    store,
-    files: list[str] | None = None,
-    *,
-    mutate=None,
-    txn: tuple[str, int] | None = None,
-) -> int | None:
-    if store is None:
-        from sydradb_spark import manifest as mf
-
-        return mf.commit(path, files, mutate=mutate, txn=txn)
-    from sydradb_spark import objectstore as obs
-
-    return obs.commit_cas(store, POINTS_STORE_TABLE, files, mutate=mutate, txn=txn)
+    _, fs, jroot = hadoop_fs(spark, path)
+    out = []
+    if fs.exists(jroot):
+        for part in fs.listStatus(jroot):
+            pname = part.getPath().getName()
+            if not (part.isDirectory() and pname.startswith("hour_bucket=")):
+                continue
+            for f in fs.listStatus(part.getPath()):
+                name = f.getPath().getName()
+                if name.endswith(".parquet") and not name.startswith("."):
+                    out.append(f"{pname}/{name}")
+    return sorted(out)
 
 
 def _write_tasks(spark: SparkSession) -> int:
@@ -136,6 +88,28 @@ def _write_tasks(spark: SparkSession) -> int:
     return int(spark.conf.get("spark.sql.shuffle.partitions", "200"))
 
 
+def _layout(df: DataFrame):
+    """The table's file layout as a writer: one shuffle on hour_bucket,
+    rows (series_id, ts)-sorted within each hour file.
+
+    The sort key MUST lead with the partition column: Spark's
+    planned write (V1Writes, default-on in 3.4+) requires child ordering
+    [hour_bucket] for a partitionBy write — a child sorted only by
+    (series_id, ts) does not satisfy it, so the planner stacked its own
+    Sort[hour_bucket] on top and EliminateSorts then dropped the user sort
+    entirely: files were written hour-clustered but NOT (series_id,
+    ts)-sorted, silently voiding the row-group-stats skipping the layout
+    contract promises. Leading with hour_bucket satisfies the required
+    ordering (no extra sort inserted) AND keeps the within-partition
+    (series_id, ts) order — one sort, the intended layout."""
+    return (
+        df.select(*POINT_COLS, *[c for c in df.columns if c not in POINT_COLS])
+        .repartition(_write_tasks(df.sparkSession), F.col("hour_bucket"))
+        .sortWithinPartitions("hour_bucket", "series_id", "ts")
+        .write.partitionBy("hour_bucket")
+    )
+
+
 def write_points(
     df: DataFrame,
     path: str,
@@ -144,47 +118,37 @@ def write_points(
     store=None,
 ) -> None:
     """Hour-partitioned write, ts-sorted within files (reference segment
-    writer). One shuffle on hour_bucket; files within a partition are sorted
-    so Parquet page stats make ts-range reads skip pages.
+    writer, ``_layout``), committed through the table's manifest
+    (``objectstore.commit_cas``) so readers flip between consistent
+    versions atomically: ``overwrite`` commits a full-replacement file
+    list, ``append`` adds its files to the current one. The first commit
+    on a table without a manifest adopts the data files already on disk,
+    so an append never hides the rows a plain table held.
 
-    Commits a file manifest (sydradb_spark.manifest) so readers flip between
-    consistent versions atomically: overwrite and new-table writes always
-    commit; appends extend the table's manifest when it has one. Appending
-    to a pre-manifest table keeps plain directory semantics.
-
-    ``txn=(app_id, txn_version)`` makes the append idempotent: a write whose
+    ``txn=(app_id, txn_version)`` makes the write idempotent: a write whose
     txn is already in the manifest's ledger (a replayed streaming batch —
     reference WAL replay-above-highwater guard, engine.zig:406-437) is a
     no-op. The pre-check skips the parquet write entirely on the common
     replay path; the commit itself re-checks inside the CAS loop, so a
     replay that staged files but loses the ledger check leaves only
-    unreferenced orphans for ``manifest.vacuum`` — LATEST never sees a
-    duplicate row.
+    unreferenced orphans for vacuum — LATEST never sees a duplicate row.
 
-    Appends to a MANIFESTED table stage through a PRIVATE
-    ``.staging-<uuid>/`` dir and rename the part files into the layout
-    before committing (r12): Spark's ``mode("append")`` shares Hadoop's
-    ``_temporary/0`` staging across jobs, so two concurrent appenders to
-    one table destroy each other's in-flight staging when either commits
-    (found by the two-streams-one-table soak test). Private staging makes
-    concurrent appends collision-free, gives the commit the EXACT moved
-    file list instead of a directory-listing diff, and a crash between the
-    renames and the manifest commit leaves only unreferenced orphans —
-    same contract as before. Hidden dot-dirs are invisible to Spark's file
-    index and to ``manifest.data_files``; crashed staging dirs are
-    reclaimed by ``manifest.vacuum``.
+    Every write stages through a PRIVATE ``.staging-<uuid>/`` dir and
+    renames the part files into the layout before committing:
+    Spark's ``mode("append")`` shares Hadoop's ``_temporary/0`` staging
+    across jobs, so two concurrent appenders to one table destroy each
+    other's in-flight staging, and an overwrite into the live path would
+    truncate the manifest, its history and every app's txn ledger with it.
+    Private staging makes concurrent writes collision-free, gives the
+    commit the EXACT moved file list, and a crash between the renames and
+    the commit leaves only unreferenced orphans. Hidden dot-dirs are
+    invisible to Spark's file index; crashed staging dirs are reclaimed by
+    ``vacuum_points``.
 
-    Backends (r14, VERDICT r13 item 1): ``store=None`` is the local
-    link-CAS manifest protocol and REQUIRES a POSIX table path — a URI
-    location raises instead of silently committing the exactly-once ledger
-    to a relative local ``s3a:/...`` junk directory while the data goes to
-    the store. Object-store tables pass ``store=`` (an
-    ``objectstore.ObjectStore`` scoped to this table): every write then
-    stages privately and commits the manifest through the store's
-    conditional PUT, with data staging routed through the Hadoop FS API
-    when ``path`` is a URI."""
-    from sydradb_spark import manifest as mf
-
+    The manifest lives beside the data (``<path>/_manifest/``) unless
+    ``store=`` (an ``objectstore.ObjectStore`` scoped to this table) is
+    given; a URI ``path`` requires ``store=`` (``objectstore.resolve``),
+    and its data staging runs through the Hadoop FS API."""
     # __ns/__tsr/__ssrc are the events-adapter pushdown hints
     # (tables.normalize_events / events_points) — redundant with ts/series;
     # stored tables prune via hour_bucket, and series is a real stored
@@ -192,77 +156,29 @@ def write_points(
     for hint in ("__ns", "__tsr", "__ssrc"):
         if hint in df.columns:
             df = df.drop(hint)
-    local = _posix_table_path(path)
-    if store is None and local is None:
-        raise ValueError(
-            f"write_points on the URI location {path!r} needs store=: the "
-            "POSIX manifest protocol would silently commit the exactly-once "
-            "ledger to a relative LOCAL directory while the data goes to "
-            "the store (VERDICT r13 item 1) — pass an objectstore-backed "
-            "store scoped to this table"
-        )
-    if store is not None:
-        # store-manifested tables are ALWAYS manifested (v1 on first write)
-        manifested = _pm_latest(path, store) is not None
-        fresh = not manifested
-    else:
-        path = str(local)
-        fresh = not Path(path).exists()
-        manifested = mf.has_manifest(path)
+    if mode not in ("append", "overwrite"):
+        raise ValueError(f"write_points mode must be append or overwrite: {mode!r}")
+    mstore, key = objectstore.resolve(path, store, POINTS_STORE_TABLE)
+    manifested = objectstore.latest_version(mstore, key) is not None
     if txn is not None and manifested:
         # the pre-check applies to EVERY mode: in overwrite mode especially,
-        # the destructive parquet rewrite would otherwise run before the
-        # ledger check, and a replayed txn's commit would no-op while LATEST
-        # kept referencing the pre-overwrite files the rewrite just deleted
-        last = _pm_read_txn(path, store, txn[0])
+        # the staged rewrite would otherwise run before the ledger check
+        last = objectstore.read_txn(mstore, key, txn[0])
         if last is not None and last >= txn[1]:
             return  # replayed batch — this txn is already durable
-    # the sort key MUST lead with the partition column (r16): Spark's
-    # planned write (V1Writes, default-on in 3.4+) requires child ordering
-    # [hour_bucket] for a partitionBy write — a child sorted only by
-    # (series_id, ts) does not satisfy it, so the planner stacked its own
-    # Sort[hour_bucket] on top and EliminateSorts then dropped the user
-    # sort entirely: files were written hour-clustered but NOT
-    # (series_id, ts)-sorted, silently voiding the row-group-stats skipping
-    # the layout contract promises (verified against the executed
-    # WriteFiles plan: one Sort[hour_bucket] node, user sort gone).
-    # Leading with hour_bucket satisfies the required ordering (no extra
-    # sort inserted) AND restores the within-partition (series_id, ts)
-    # order — one sort, the intended layout.
-    shaped = (
-        df.select(*POINT_COLS, *[c for c in df.columns if c not in POINT_COLS])
-        .repartition(_write_tasks(df.sparkSession), F.col("hour_bucket"))
-        .sortWithinPartitions("hour_bucket", "series_id", "ts")
-        .write.partitionBy("hour_bucket")
-    )
-    if store is not None:
-        moved = _publish_staged(shaped, path, df.sparkSession)
-        if mode == "append" and manifested:
-            # an empty batch still commits (txn ledger must record the batch)
-            _pm_commit(path, store, mutate=lambda old: old + moved, txn=txn)
-        else:
-            # overwrite (and any first write): full-replacement flip — old
-            # files stay on the store until vacuum, readers stay atomic
-            _pm_commit(path, store, files=moved, txn=txn)
-    elif manifested and not fresh:
-        moved = _stage_and_publish(shaped, path)
-        if mode == "append":
-            # an empty batch still commits (txn ledger must record the batch)
-            mf.commit(path, mutate=lambda old: old + moved, txn=txn)
-        else:
-            # overwrite on a LIVE manifested table is a manifest-level flip,
-            # NOT a Spark directory truncation (r13 review): static
-            # partitionOverwriteMode deletes the whole path — _manifest/,
-            # version history, and BOTH apps' txn ledgers included — and
-            # readers crash mid-scan on the vanished files. Staging the new
-            # files in and committing a full-replacement list keeps readers
-            # atomic (old files stay until vacuum) and commit_cas carries
-            # the ledger forward.
-            mf.commit(path, files=moved, txn=txn)
+    spark = df.sparkSession
+    # listed BEFORE the publish, so the batch's own files are not adopted
+    adopted = [] if manifested or mode == "overwrite" else _data_files(path, spark)
+    moved = _publish_staged(_layout(df), path, spark)
+    if mode == "overwrite":
+        # full-replacement flip: old files stay until vacuum, readers stay
+        # atomic, and commit_cas carries the txn ledger forward
+        objectstore.commit_cas(mstore, key, files=moved, txn=txn)
     else:
-        shaped.mode(mode).parquet(path)
-        if mode == "overwrite" or fresh:
-            mf.commit(path, mf.data_files(path), txn=txn)
+        # an empty batch still commits (the txn ledger must record the batch)
+        objectstore.commit_cas(
+            mstore, key, mutate=lambda old: sorted({*old, *adopted, *moved}), txn=txn
+        )
 
 
 def _stage_and_publish(shaped_writer, path: str) -> list[str]:
@@ -274,7 +190,7 @@ def _stage_and_publish(shaped_writer, path: str) -> list[str]:
     before/after ``data_files()`` diff double-commits (or drops) a
     concurrent appender's files. Publication time is stamped on every
     renamed file — rename(2) preserves the staging mtime, which would void
-    ``manifest.vacuum``'s age guard for writes longer than the window."""
+    vacuum's age guard for writes longer than the window."""
     import os
     import uuid
 
@@ -353,67 +269,43 @@ def _publish_staged(shaped_writer, path: str, spark: SparkSession) -> list[str]:
 
 
 def read_points(spark: SparkSession, path: str, store=None) -> DataFrame:
-    """Read the table's LATEST manifest version (plain directory read for
-    pre-manifest tables). ``store=`` reads a store-manifested table's
-    entry list through the objectstore protocol; a URI path WITHOUT a
-    store reads as a plain directory (no POSIX manifest can exist there —
+    """Read the table's LATEST manifest version. A table without a manifest
+    reads as a plain directory, and so does a URI path without ``store=``
+    (no manifest can live beside the data there, ``objectstore.resolve``;
     a store-manifested URI table must be read with its store, or the read
     would include uncommitted staged orphans)."""
-    from sydradb_spark import manifest as mf
-    from sydradb_spark.model import POINTS_SCHEMA
-
-    local = _posix_table_path(path)
-    if store is not None:
-        if _pm_latest(path, store) is None:
-            return spark.createDataFrame([], POINTS_SCHEMA)
-        files = _pm_files(path, store)
-        if not files:
-            return spark.createDataFrame([], POINTS_SCHEMA)
-        df = (
-            spark.read.option("basePath", path)
-            .parquet(*[f"{path.rstrip('/')}/{f}" for f in files])
-        )
-    elif local is None:
-        df = spark.read.parquet(path)  # plain URI directory
-    elif mf.has_manifest(local):
-        path = str(local)
-        files = mf.read_files(path)
-        if not files:
-            return spark.createDataFrame([], POINTS_SCHEMA)
-        df = (
-            spark.read.option("basePath", path)
-            .parquet(*[f"{path}/{f}" for f in files])
-        )
-    else:
-        df = spark.read.parquet(str(local))
-    extra = [c for c in df.columns if c not in POINT_COLS]
-    # the partition column comes back as the inferred directory-value type
-    return df.select(
-        "series_id",
-        "series",
-        "tags",
-        "ts",
-        "value",
-        F.col("hour_bucket").cast("long").alias("hour_bucket"),
-        *extra,
-    )
+    try:
+        mstore, key = objectstore.resolve(path, store, POINTS_STORE_TABLE)
+    except ValueError:
+        return _points_frame(spark.read.parquet(path))
+    v = objectstore.latest_version(mstore, key)
+    if v is None:
+        return _points_frame(spark.read.parquet(_root(path)))
+    return _read_files(spark, path, objectstore.read_files(mstore, key, v))
 
 
 def read_points_version(
     spark: SparkSession, path: str, version: int, store=None
 ) -> DataFrame:
     """Time travel: read a specific committed manifest version (files are
-    immutable and retained until vacuum). Both manifest backends."""
+    immutable and retained until vacuum)."""
+    mstore, key = objectstore.resolve(path, store, POINTS_STORE_TABLE)
+    return _read_files(spark, path, objectstore.read_files(mstore, key, version))
+
+
+def _read_files(spark: SparkSession, path: str, files: list[str]) -> DataFrame:
     from sydradb_spark.model import POINTS_SCHEMA
 
-    if store is None:
-        path = str(_require_posix(path, "read_points_version(store=None)"))
-    files = _pm_files(path, store, version=version)
     if not files:
         return spark.createDataFrame([], POINTS_SCHEMA)
-    df = spark.read.option("basePath", path).parquet(
-        *[f"{path.rstrip('/')}/{f}" for f in files]
+    root = _root(path)
+    return _points_frame(
+        spark.read.option("basePath", root).parquet(*[f"{root}/{f}" for f in files])
     )
+
+
+def _points_frame(df: DataFrame) -> DataFrame:
+    # the partition column comes back as the inferred directory-value type
     extra = [c for c in df.columns if c not in POINT_COLS]
     return df.select(
         *POINT_COLS[:5],
@@ -508,54 +400,36 @@ def compact_storage(
 ) -> None:
     """Rewrite the stored table deduped (the reference's segment-merge job).
 
-    Manifested tables (either backend) compact through a STAGED MANIFEST
-    FLIP (r14, VERDICT r13 item 2): the deduped rows stage into the live
-    layout and ONE commit swaps the file list — readers never see the
-    table absent (the old ``_swap_dir`` left a crash window where the live
-    directory did not exist, and a concurrent reader mid-scan crashed).
-    The commit's ``mutate`` drops exactly the snapshot-version files this
-    rewrite read, so a concurrent append mid-compaction rides through to
-    the new version instead of being lost, and ``commit_cas`` carries the
-    txn ledger forward — a streaming batch whose checkpoint commit is
-    still pending cannot re-append after compaction (replay guard
-    survives rewrites). Old files are reclaimed by vacuum.
+    Manifested tables compact through a STAGED MANIFEST FLIP: the deduped
+    rows stage into the live layout and ONE commit swaps the file list —
+    readers never see the table absent (``_swap_dir`` leaves a crash window
+    where the live directory does not exist, and a concurrent reader
+    mid-scan crashes). The commit's ``mutate`` drops exactly the
+    snapshot-version files this rewrite read, so a concurrent append
+    mid-compaction rides through to the new version instead of being lost,
+    and ``commit_cas`` carries the txn ledger forward — a streaming batch
+    whose checkpoint commit is still pending cannot re-append after
+    compaction. Old files are reclaimed by vacuum.
 
     Pre-manifest plain tables keep the legacy staged-copy + dir swap (the
     best a bare filesystem gives without a manifest to flip)."""
-    from sydradb_spark import manifest as mf
-
-    local = _posix_table_path(path)
-    if store is None:
-        _require_posix(path, "compact_storage(store=None)")
-        path = str(local)
-        manifested = mf.has_manifest(path)
-    else:
-        manifested = _pm_latest(path, store) is not None
-    if manifested:
-        snap_v = _pm_latest(path, store)
-        compacted = compact_points(
-            read_points_version(spark, path, snap_v, store=store), order_col
-        )
-        extra = [c for c in compacted.columns if c not in POINT_COLS]
-        shaped = (
-            compacted.select(*POINT_COLS, *extra)
-            .repartition(_write_tasks(spark), F.col("hour_bucket"))
-            .sortWithinPartitions("hour_bucket", "series_id", "ts")
-            .write.partitionBy("hour_bucket")
-        )
-        moved = _publish_staged(shaped, path, spark)
-        rewritten = set(_pm_files(path, store, version=snap_v))
-        _pm_commit(
-            path,
-            store,
-            mutate=lambda old: [f for f in old if f not in rewritten] + moved,
-        )
+    mstore, key = objectstore.resolve(path, store, POINTS_STORE_TABLE)
+    snap_v = objectstore.latest_version(mstore, key)
+    if snap_v is None:
+        compacted = compact_points(read_points(spark, path), order_col)
+        tmp = _root(path) + ".compact.tmp"
+        write_points(compacted, tmp, mode="overwrite")
+        _swap_dir(Path(tmp), Path(_root(path)))
         return
-    compacted = compact_points(read_points(spark, path), order_col)
-    tmp = path.rstrip("/") + ".compact.tmp"
-    write_points(compacted, tmp, mode="overwrite")
-    mf.carry_ledger(path, tmp)
-    _swap_dir(Path(tmp), Path(path))
+    files = objectstore.read_files(mstore, key, snap_v)
+    compacted = compact_points(_read_files(spark, path, files), order_col)
+    moved = _publish_staged(_layout(compacted), path, spark)
+    rewritten = set(files)
+    objectstore.commit_cas(
+        mstore,
+        key,
+        mutate=lambda old: [f for f in old if f not in rewritten] + moved,
+    )
 
 
 # --- retention (TTL) ----------------------------------------------------------
@@ -592,42 +466,29 @@ def drop_expired_partitions(
     """Global-TTL fast path: drop hour_bucket=N partitions with
     N + 3600 <= cutoff. Pure metadata — no data read/rewritten, which is
     what makes retention O(partitions) instead of O(rows) at 100 TB.
-    Manifest tables (either backend) commit a filtered file list (one
-    atomic pointer flip; physical files go with vacuum); plain tables
-    remove the directories. Returns the dropped bucket values."""
-    from sydradb_spark import manifest as mf
+    Manifest tables commit a filtered file list (one atomic pointer flip;
+    physical files go with vacuum); plain tables remove the directories.
+    Returns the dropped bucket values."""
+
+    def _bucket(rel: str) -> int:
+        return int(rel.split("=", 1)[1].split("/", 1)[0])
 
     def _expired(bucket: int) -> bool:
         return bucket + SECONDS_PER_HOUR <= cutoff_hour_bucket
 
-    if store is None:
-        path = str(_require_posix(path, "drop_expired_partitions(store=None)"))
-    if _pm_has(path, store):
-        files = _pm_files(path, store)
-        dropped = sorted(
-            {
-                int(f.split("=", 1)[1].split("/", 1)[0])
-                for f in files
-                if _expired(int(f.split("=", 1)[1].split("/", 1)[0]))
-            }
-        )
+    mstore, key = objectstore.resolve(path, store, POINTS_STORE_TABLE)
+    if objectstore.latest_version(mstore, key) is not None:
+        files = objectstore.read_files(mstore, key)
+        dropped = sorted({_bucket(f) for f in files if _expired(_bucket(f))})
         if dropped:
-            _pm_commit(
-                path,
-                store,
-                mutate=lambda old: [
-                    f
-                    for f in old
-                    if not _expired(int(f.split("=", 1)[1].split("/", 1)[0]))
-                ],
+            objectstore.commit_cas(
+                mstore,
+                key,
+                mutate=lambda old: [f for f in old if not _expired(_bucket(f))],
             )
         return dropped
-    if store is not None:
-        return []  # store-manifested table with no manifest yet: nothing
-
     dropped = []
-    root = Path(path)
-    for d in root.glob("hour_bucket=*"):
+    for d in Path(_root(path)).glob("hour_bucket=*"):
         bucket = int(d.name.split("=", 1)[1])
         if _expired(bucket):
             shutil.rmtree(d)
@@ -645,18 +506,16 @@ def optimize_partitions(
     keeps streaming appends (one file per micro-batch per partition) from
     degrading scans. Only partitions exceeding ``max_files_per_partition``
     are rewritten: their rows re-shuffle into one file per hour value,
-    append into the live layout, and a single manifest commit swaps the
+    stage into the live layout, and a single manifest commit swaps the
     file lists atomically (readers never see a partial merge). Returns the
     optimized hour_bucket values. Plain tables: use ``compact_storage``."""
     from collections import defaultdict
 
-    if store is None:
-        path = str(_require_posix(path, "optimize_partitions(store=None)"))
-    if not _pm_has(path, store):
+    mstore, key = objectstore.resolve(path, store, POINTS_STORE_TABLE)
+    if objectstore.latest_version(mstore, key) is None:
         raise ValueError("optimize_partitions requires a manifest table")
-    files = _pm_files(path, store)
     by_part: dict[int, list[str]] = defaultdict(list)
-    for f in files:
+    for f in objectstore.read_files(mstore, key):
         by_part[int(f.split("=", 1)[1].split("/", 1)[0])].append(f)
     targets = sorted(
         b for b, fs in by_part.items() if len(fs) > max_files_per_partition
@@ -664,143 +523,120 @@ def optimize_partitions(
     if not targets:
         return []
     target_files = [f for b in targets for f in by_part[b]]
-    df = spark.read.option("basePath", path).parquet(
-        *[f"{path.rstrip('/')}/{f}" for f in target_files]
-    )
-    extra = [c for c in df.columns if c not in POINT_COLS]
-    shaped = (
-        df.select(
-            *POINT_COLS[:5],
-            F.col("hour_bucket").cast("long").alias("hour_bucket"),
-            *extra,
-        )
-        .repartition(_write_tasks(spark), F.col("hour_bucket"))
-        .sortWithinPartitions("hour_bucket", "series_id", "ts")
-        .write.partitionBy("hour_bucket")
-    )
     # private staging + exact moved list (r13 review): a direct
-    # mode("append") with a before/after data_files() diff both shares
-    # Hadoop's _temporary/0 with concurrent appenders AND double-commits
-    # any file they rename in during this job's window
-    new = _publish_staged(shaped, path, spark)
+    # mode("append") with a before/after listing diff both shares Hadoop's
+    # _temporary/0 with concurrent appenders AND double-commits any file
+    # they rename in during this job's window
+    new = _publish_staged(
+        _layout(_read_files(spark, path, target_files)), path, spark
+    )
     dropped = set(target_files)
-    _pm_commit(
-        path, store, mutate=lambda old: [f for f in old if f not in dropped] + new
+    objectstore.commit_cas(
+        mstore, key, mutate=lambda old: [f for f in old if f not in dropped] + new
     )
     return targets
 
 
 # --- snapshot / restore -------------------------------------------------------
+def _local_data_root(path: str, op: str) -> Path:
+    """Hardlink-based operations need the data files on a local path."""
+    local = _posix_table_path(path)
+    if local is None:
+        raise ValueError(
+            f"{op} hardlinks data files and cannot run on the URI location "
+            f"{path!r}: a full remote copy is a job, not a metadata operation"
+        )
+    return Path(local)
+
+
+def _link_files(src_root: Path, dst_root: Path, files: list[str]) -> None:
+    """Hardlink (or, across devices, copy) ``files`` from one table layout
+    into another; a name already present is the identical immutable file
+    (part names are unique per write job) and is skipped. Publication time
+    is stamped on each new name for the vacuum age guard."""
+    import os
+
+    for rel in files:
+        dst = dst_root / rel
+        if dst.exists():
+            continue
+        dst.parent.mkdir(parents=True, exist_ok=True)
+        try:
+            os.link(src_root / rel, dst)
+        except OSError:  # cross-device etc. → real copy
+            shutil.copy2(src_root / rel, dst)
+        os.utime(dst)
+
+
 def snapshot(path: str, dest: str, store=None) -> None:
     """Consistent copy of the stored table (reference snapshot.zig:3-47 copies
     MANIFEST + wal/ + segments/ + tags.json).
 
-    Manifest tables snapshot in O(metadata): hardlink the LATEST version's
-    data files (immutable once committed — writers only ever add files) and
-    commit a fresh local manifest at ``dest`` — no data bytes move, which
-    is the only snapshot that works at 100 TB (the same trick as a
-    table-format snapshot / cheap clone). Plain tables fall back to a full
-    copy. ``store=`` snapshots a store-manifested table whose DATA lives on
-    a local path (the snapshot itself is always a local-manifested table);
-    URI data locations are rejected loudly — hardlinks don't exist there,
-    and a full remote copy is a job, not a metadata operation."""
-    from sydradb_spark import manifest as mf
-    from sydradb_spark import objectstore as obs
-
-    local = _require_posix(path, "snapshot (hardlink clone of the data files)")
-    dest = str(_require_posix(dest, "snapshot destination"))
-    path = str(local)
-    if Path(dest).exists():
+    Manifest tables snapshot in O(metadata): hardlink ONE version's data
+    files (immutable once committed — writers only ever add files) and
+    commit them, with that same version's txn ledger, as a fresh manifest
+    at ``dest`` — no data bytes move, which is the only snapshot that
+    works at 100 TB (the same trick as a table-format cheap clone). The
+    ledger travels with the files: restoring a snapshot
+    WITHOUT it erases the streaming replay guard, and a ledger read at a
+    later version than the files would make a batch the snapshot never
+    held look durable. Plain tables fall back to a full copy. The snapshot
+    itself is always a table with its manifest beside the data; the source
+    data must be on a local path."""
+    src, skey = objectstore.resolve(path, store, POINTS_STORE_TABLE)
+    dst, dkey = objectstore.resolve(dest, None, "")
+    src_root = _local_data_root(path, "snapshot")
+    dst_root = _local_data_root(dest, "snapshot")
+    if dst_root.exists():
         raise FileExistsError(f"snapshot destination exists: {dest}")
-    if store is None and not mf.has_manifest(path):
-        shutil.copytree(path, dest)
+    v = objectstore.latest_version(src, skey)
+    if v is None:
+        shutil.copytree(src_root, dst_root)
         return
-    src_root, dst_root = Path(path), Path(dest)
-    files = _pm_files(path, store)
+    files = objectstore.read_files(src, skey, v)
+    ledger = objectstore.read_ledger(src, skey, v)
     dst_root.mkdir(parents=True)
-    import os
-
-    for rel in files:
-        target = dst_root / rel
-        target.parent.mkdir(parents=True, exist_ok=True)
-        try:
-            os.link(src_root / rel, target)
-        except OSError:  # cross-device etc. → real copy
-            shutil.copy2(src_root / rel, target)
-    # fresh v1 manifest listing exactly the snapshotted files, plus the
-    # source's txn ledger (r13 review): restoring a snapshot WITHOUT the
-    # ledger erases the streaming replay guard — a checkpoint-replayed
-    # batch would re-append after the restore. Same reason compact_storage
-    # carries it through whole-table rewrites.
-    ledger = (
-        mf.read_ledger(path)
-        if store is None
-        else obs.read_ledger(store, POINTS_STORE_TABLE)
-    )
-    mf.commit_replace(dest, files, ledger)
+    _link_files(src_root, dst_root, files)
+    objectstore.commit_replace(dst, dkey, files, ledger)
 
 
 def restore(snapshot_path: str, path: str, store=None) -> None:
     """Replace the live table with a snapshot.
 
-    Manifested live tables restore through a STAGED MANIFEST FLIP (r14,
-    VERDICT r13 item 2): link/copy the snapshot's manifest-listed files
-    into the live layout (part names are unique per write job, so an
-    identical name can only be the identical immutable file — skipped) and
-    commit the snapshot's file list AND LEDGER as a full replacement
-    (``commit_replace`` — the replay guard rewinds with the data, so a
-    streaming batch delivered after the snapshot re-appends into the
-    restored table instead of no-op'ing against a future ledger). Readers
-    never see the table absent; the pre-restore files stay until vacuum.
+    A manifested snapshot restores through a STAGED MANIFEST FLIP: link or
+    copy the snapshot's manifest-listed files into the live layout and
+    commit the snapshot's file list AND LEDGER as a full replacement (``commit_replace`` — the replay guard rewinds with
+    the data, so a streaming batch delivered after the snapshot re-appends
+    into the restored table instead of no-op'ing against a future ledger).
+    Readers never see the table absent; the pre-restore files stay until
+    vacuum.
 
-    Pre-manifest live tables keep the legacy staged copy + dir swap.
-    ``store=`` restores a store-manifested live table (local data path)."""
-    import os
-
-    from sydradb_spark import manifest as mf
-    from sydradb_spark import objectstore as obs
-
-    snap_local = _require_posix(snapshot_path, "restore (snapshot source)")
-    live_local = _require_posix(path, "restore (live table data)")
-    path = str(live_local)
-    live_manifested = (
-        _pm_latest(path, store) is not None
-        if store is not None
-        else (live_local.exists() and mf.has_manifest(path))
-    )
-    snap_manifested = mf.has_manifest(str(snap_local))
-    if store is not None and not snap_manifested:
-        # the legacy dir-swap fallback would replace the data while the
-        # STORE manifest kept referencing the removed files — store-mode
-        # readers would break silently (r14 self-review)
-        raise ValueError(
-            f"restore(store=...) needs a manifested snapshot; {snapshot_path!r} "
-            "has no _manifest (pre-manifest copytree snapshot)"
+    A pre-manifest (copytree) snapshot keeps the legacy staged copy + dir
+    swap, and only over a live table without a manifest: over a manifested
+    one the swap would leave a store-held manifest referencing removed
+    files, so it is rejected."""
+    snap, snkey = objectstore.resolve(snapshot_path, None, "")
+    live, lkey = objectstore.resolve(path, store, POINTS_STORE_TABLE)
+    snap_root = _local_data_root(snapshot_path, "restore")
+    live_root = _local_data_root(path, "restore")
+    snap_v = objectstore.latest_version(snap, snkey)
+    if snap_v is not None:
+        files = objectstore.read_files(snap, snkey, snap_v)
+        _link_files(snap_root, live_root, files)
+        objectstore.commit_replace(
+            live, lkey, files, objectstore.read_ledger(snap, snkey, snap_v)
         )
-    if (live_manifested or store is not None) and snap_manifested:
-        files = mf.read_files(str(snap_local))
-        for rel in files:
-            dst = live_local / rel
-            if dst.exists():
-                continue
-            dst.parent.mkdir(parents=True, exist_ok=True)
-            try:
-                os.link(snap_local / rel, dst)
-            except OSError:  # cross-device etc. → real copy
-                shutil.copy2(snap_local / rel, dst)
-            os.utime(dst)  # publication stamp for the vacuum age guard
-        ledger = mf.read_ledger(str(snap_local))
-        if store is None:
-            mf.commit_replace(path, files, ledger)
-        else:
-            obs.commit_replace(store, POINTS_STORE_TABLE, files, ledger)
         return
-    live = Path(path)
-    tmp = Path(path.rstrip("/") + ".restore.tmp")
+    if objectstore.latest_version(live, lkey) is not None:
+        raise ValueError(
+            f"restore over a manifested table needs a manifested snapshot; "
+            f"{snapshot_path!r} has no _manifest (pre-manifest copytree snapshot)"
+        )
+    tmp = live_root.with_name(live_root.name + ".restore.tmp")
     if tmp.exists():
         shutil.rmtree(tmp)
-    shutil.copytree(str(snap_local), tmp)
-    _swap_dir(tmp, live)
+    shutil.copytree(snap_root, tmp)
+    _swap_dir(tmp, live_root)
 
 
 # --- durable DELETE -----------------------------------------------------------
@@ -816,22 +652,25 @@ def delete_where(
     the time bounds are read and rewritten; untouched partitions are never
     opened.
 
-    Manifest tables get a true ATOMIC commit: replacement files append into
+    Manifest tables get a true ATOMIC commit: replacement files stage into
     the live layout (Parquet part names never collide), then one manifest
     commit drops every old file of the affected partitions and adds the new
     ones — a crash at any point leaves LATEST on a fully consistent version
     (the reference's MANIFEST swap; what Delta/Iceberg REPLACE WHERE does).
     Pre-manifest tables keep the staged rename-before-remove dir swap."""
-    if store is None:
-        path = str(_require_posix(path, "delete_where(store=None)"))
-
+    mstore, key = objectstore.resolve(path, store, POINTS_STORE_TABLE)
     # pin ONE manifest snapshot for both the read plan and the commit's
     # drop list — read_points would take its own LATEST, and a commit
     # landing between two listings would desynchronize them
-    snapshot_version = _pm_latest(path, store) if _pm_has(path, store) else None
-    df = (
-        read_points_version(spark, path, snapshot_version, store=store)
+    snapshot_version = objectstore.latest_version(mstore, key)
+    files = (
+        objectstore.read_files(mstore, key, snapshot_version)
         if snapshot_version is not None
+        else None
+    )
+    df = (
+        _read_files(spark, path, files)
+        if files is not None
         else read_points(spark, path, store=store)
     )
     hb = hour_bucket_bounds(ts_min, ts_max)
@@ -841,7 +680,7 @@ def delete_where(
         return
     remaining = scoped.where(~F.coalesce(predicate, F.lit(False)))
 
-    if snapshot_version is not None:
+    if files is not None:
         # drop EXACTLY the files this rewrite read (the snapshot version's
         # affected-partition files), not everything under the partition
         # prefixes (r13 review): a concurrent append into an affected hour
@@ -849,32 +688,22 @@ def delete_where(
         # drop would silently delete those rows, and a before/after
         # directory diff would double-commit them
         affected_dirs = tuple(f"hour_bucket={b}/" for b in affected)
-        rewritten = {
-            f
-            for f in _pm_files(path, store, version=snapshot_version)
-            if f.startswith(affected_dirs)
-        }
-        extra = [c for c in remaining.columns if c not in POINT_COLS]
-        shaped = (
-            remaining.select(*POINT_COLS, *extra)
-            .repartition(_write_tasks(remaining.sparkSession), F.col("hour_bucket"))
-            .sortWithinPartitions("hour_bucket", "series_id", "ts")
-            .write.partitionBy("hour_bucket")
-        )
-        new = _publish_staged(shaped, path, spark)
-        _pm_commit(
-            path,
-            store,
+        rewritten = {f for f in files if f.startswith(affected_dirs)}
+        new = _publish_staged(_layout(remaining), path, spark)
+        objectstore.commit_cas(
+            mstore,
+            key,
             mutate=lambda old: [f for f in old if f not in rewritten] + new,
         )
         return
 
-    tmp = path.rstrip("/") + ".delete.tmp"
+    root = _root(path)
+    tmp = root + ".delete.tmp"
     if Path(tmp).exists():
         shutil.rmtree(tmp)
     write_points(remaining, tmp, mode="overwrite")
     for bucket in affected:
-        live_dir = Path(path) / f"hour_bucket={bucket}"
+        live_dir = Path(root) / f"hour_bucket={bucket}"
         staged = Path(tmp) / f"hour_bucket={bucket}"
         if staged.exists():
             _swap_dir(staged, live_dir)
@@ -883,7 +712,86 @@ def delete_where(
     shutil.rmtree(tmp, ignore_errors=True)
 
 
-# --- vacuum (backend-dispatched) -----------------------------------------------
+# --- vacuum -------------------------------------------------------------------
+def _tree_mtime(root: Path) -> float:
+    """Newest mtime anywhere inside ``root`` (the entry itself included).
+    A long-running Spark write into a staging tree advances only LEAF
+    mtimes — judging liveness by the root dir's own mtime would let a
+    vacuum rmtree a live writer's staging mid-write. Missing
+    entries (racing their creator/deleter) count as 'now' = maximally
+    young, so races always err toward keeping."""
+    import time
+
+    try:
+        newest = root.stat().st_mtime
+        if root.is_dir():
+            for p in root.rglob("*"):
+                newest = max(newest, p.stat().st_mtime)
+    except FileNotFoundError:
+        return time.time()
+    return newest
+
+
+def _reclaim_local(
+    root: Path, entries: list[str], kept: set[str], min_age_seconds: int
+) -> list[str]:
+    """The local data pass of vacuum, shared by the points and rollup
+    tables: remove every entry (a data file with its checksum sibling, or
+    an entry directory) that no retained version references and whose
+    newest mtime is outside the age window, then the leftovers a crashed
+    writer can strand — hidden-only partition dirs, private staging trees
+    and manifest commit temp files. Returns the removed entries."""
+    import time
+
+    now = time.time()
+
+    def _old(p: Path) -> bool:
+        return now - _tree_mtime(p) >= min_age_seconds
+
+    removed = []
+    for rel in entries:
+        p = root / rel
+        if rel in kept or not _old(p):
+            continue
+        if p.is_dir():
+            shutil.rmtree(p, ignore_errors=True)
+        else:
+            # missing_ok: two concurrent vacuums (two streams, one table)
+            # may both list the same unreferenced file
+            p.unlink(missing_ok=True)
+            p.with_name(f".{p.name}.crc").unlink(missing_ok=True)
+        removed.append(rel)
+    # prune partition dirs holding nothing but leftover hidden files —
+    # age-guarded and race-tolerant: a concurrent appender
+    # renames the hidden .crc sibling BEFORE its parquet file, so a fresh
+    # dir can legitimately hold only young hidden files; deleting them and
+    # rmdir'ing would yank the parent from under the in-flight rename
+    for d in root.glob("hour_bucket=*"):
+        try:
+            hidden = list(d.iterdir()) if d.is_dir() else None
+        except FileNotFoundError:
+            continue  # racing another vacuum
+        if hidden is None or any(p.name[0] != "." for p in hidden):
+            continue
+        if not _old(d):
+            continue  # possibly an appender's just-renamed .crc
+        try:
+            for p in hidden:
+                p.unlink(missing_ok=True)
+            d.rmdir()
+        except OSError:
+            pass  # a file landed between the listing and the rmdir — keep
+    # crashed private staging (a writer died before its renames) and
+    # orphaned commit temp files (a committer died between write and link)
+    for stg in root.glob(".staging-*"):
+        if stg.is_dir() and _old(stg):
+            shutil.rmtree(stg, ignore_errors=True)
+    for tmp in root.glob("_manifest/.*.tmp"):
+        if _old(tmp):
+            tmp.unlink(missing_ok=True)
+    return sorted(removed)
+
+
 def vacuum_points(
     path: str,
     store=None,
@@ -891,93 +799,38 @@ def vacuum_points(
     min_age_seconds: int = 600,
     spark: SparkSession | None = None,
 ) -> list[str]:
-    """Reclaim data files unreferenced by the retained manifest versions —
-    the points-table twin of ``rollup_stream.vacuum_rollup`` (r14).
+    """Reclaim data files unreferenced by the retained manifest versions,
+    and prune version docs outside the retained window. Returns the
+    removed data files.
 
-    ``store=None`` delegates to ``manifest.vacuum`` (POSIX paths only —
-    URIs rejected loudly by the manifest module). With ``store=``, version
-    pruning runs through the objectstore protocol and the DATA pass walks
-    local paths with the stdlib or URI locations through the Hadoop FS API
-    via ``spark``; without a session a non-local data pass is SKIPPED with
-    a logged warning (version pruning still runs; entries wait for a
-    vacuum that has one — the streaming sink's in-sink maintenance always
-    passes its session). Age guards mirror ``manifest.vacuum``: files and
-    staging trees younger than ``min_age_seconds`` (newest mtime anywhere
-    inside) are never touched."""
+    Retained = the last ``keep_versions`` versions PLUS any version younger
+    than ``min_age_seconds`` (``objectstore.vacuum_versions``). The age
+    window is the local-race guard: a time-travel reader holding version
+    N−k, or an appender that has staged data files but not yet committed,
+    survives a concurrent vacuum as long as it started within the window;
+    files and staging trees younger than it (newest mtime anywhere inside)
+    are never deleted. Set ``min_age_seconds=0`` only in offline
+    maintenance where no concurrent readers/writers exist. A table with no
+    manifest has nothing to reclaim against and is left untouched.
+
+    The data pass walks local paths with the stdlib and URI locations
+    through the Hadoop FS API via ``spark``; without a session a non-local
+    data pass is SKIPPED with a logged warning (version pruning still
+    runs; entries wait for a vacuum that has one — the streaming sink's
+    in-sink maintenance always passes its session)."""
     import time
 
-    from sydradb_spark import manifest as mf
-    from sydradb_spark.manifest import _tree_mtime
-
-    if store is None:
-        return mf.vacuum(
-            path, keep_versions=keep_versions, min_age_seconds=min_age_seconds
-        )
-    from sydradb_spark import objectstore as obs
-
-    obs.vacuum_versions(store, POINTS_STORE_TABLE, keep_versions=keep_versions)
-    kept: set[str] = set()
-    pre = f"{POINTS_STORE_TABLE}/_manifest/"
-    for key in store.list(pre + "v"):
-        try:
-            kept.update(
-                obs.read_files(store, POINTS_STORE_TABLE, int(key[len(pre) + 1 : -5]))
-            )
-        except (ValueError, FileNotFoundError):
-            continue  # racing a concurrent vacuum
-    now = time.time()
-    removed: list[str] = []
+    mstore, key = objectstore.resolve(path, store, POINTS_STORE_TABLE)
+    if objectstore.latest_version(mstore, key) is None:
+        return []
+    objectstore.vacuum_versions(
+        mstore, key, keep_versions=keep_versions, min_age_seconds=min_age_seconds
+    )
+    kept = objectstore.retained_files(mstore, key)
     local = _posix_table_path(path)
     if local is not None:
-        root = Path(local)
-        if not root.exists():
-            return []
-
-        def _young(p: Path) -> bool:
-            try:
-                return now - p.stat().st_mtime < min_age_seconds
-            except FileNotFoundError:
-                return True  # racing its creator — leave it alone
-
-        for f in root.glob("hour_bucket=*/*.parquet"):
-            rel = str(f.relative_to(root))
-            if rel in kept or _young(f):
-                continue
-            f.unlink(missing_ok=True)
-            crc = f.with_name(f".{f.name}.crc")
-            crc.unlink(missing_ok=True)
-            removed.append(rel)
-        for stg in root.glob(".staging-*"):
-            if stg.is_dir() and now - _tree_mtime(stg) >= min_age_seconds:
-                shutil.rmtree(stg, ignore_errors=True)
-    elif spark is not None:
-        from sydradb_spark.util import hadoop_fs
-
-        jvm, fs, jroot = hadoop_fs(spark, path)
-        if not fs.exists(jroot):
-            return []
-        for part in fs.listStatus(jroot):
-            pname = part.getPath().getName()
-            if part.isDirectory() and pname.startswith(".staging-"):
-                newest = part.getModificationTime() / 1000.0
-                it = fs.listFiles(part.getPath(), True)
-                while it.hasNext():
-                    newest = max(newest, it.next().getModificationTime() / 1000.0)
-                if now - newest >= min_age_seconds:
-                    fs.delete(part.getPath(), True)
-                continue
-            if not (part.isDirectory() and pname.startswith("hour_bucket=")):
-                continue
-            for f in fs.listStatus(part.getPath()):
-                name = f.getPath().getName()
-                if not name.endswith(".parquet") or name.startswith("."):
-                    continue
-                rel = f"{pname}/{name}"
-                if rel in kept or now - f.getModificationTime() / 1000.0 < min_age_seconds:
-                    continue
-                fs.delete(f.getPath(), False)
-                removed.append(rel)
-    else:
+        return _reclaim_local(Path(local), _data_files(local), kept, min_age_seconds)
+    if spark is None:
         # no session to reach the URI filesystem — manifest-only vacuum;
         # NOT silent (VERDICT r13 item 4's pattern): a bare cron-style call
         # would otherwise reclaim nothing forever without a signal
@@ -986,4 +839,33 @@ def vacuum_points(
             "SparkSession to reach it; only manifest versions were pruned",
             path,
         )
+        return []
+    from sydradb_spark.util import hadoop_fs
+
+    now = time.time()
+    removed: list[str] = []
+    jvm, fs, jroot = hadoop_fs(spark, path)
+    if not fs.exists(jroot):
+        return []
+    for part in fs.listStatus(jroot):
+        pname = part.getPath().getName()
+        if part.isDirectory() and pname.startswith(".staging-"):
+            newest = part.getModificationTime() / 1000.0
+            it = fs.listFiles(part.getPath(), True)
+            while it.hasNext():
+                newest = max(newest, it.next().getModificationTime() / 1000.0)
+            if now - newest >= min_age_seconds:
+                fs.delete(part.getPath(), True)
+            continue
+        if not (part.isDirectory() and pname.startswith("hour_bucket=")):
+            continue
+        for f in fs.listStatus(part.getPath()):
+            name = f.getPath().getName()
+            if not name.endswith(".parquet") or name.startswith("."):
+                continue
+            rel = f"{pname}/{name}"
+            if rel in kept or now - f.getModificationTime() / 1000.0 < min_age_seconds:
+                continue
+            fs.delete(f.getPath(), False)
+            removed.append(rel)
     return sorted(removed)

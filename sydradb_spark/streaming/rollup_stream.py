@@ -35,9 +35,9 @@ Manifest-protocol folding (r13 — VERDICT r12 item 1): on object stores
 flock path above provides NO serialization there. The manifested variants
 (``write_rollup_batch_manifested`` / ``compact_rollup_manifested`` /
 ``read_rollup_manifested`` / ``vacuum_rollup``) need no locks anywhere:
-the table's live entry list is a versioned manifest (the points sink's
-protocol — ``manifest.commit_cas`` locally, ``objectstore.commit_cas``
-through a conditional-PUT store), a fold is a CAS'd version swap whose
+the table's live entry list is a versioned manifest (the points table's
+protocol, ``objectstore.commit_cas`` — beside the data on a local path, or
+in a conditional-PUT store), a fold is a CAS'd version swap whose
 ``mutate`` removes exactly the entries it folded, and a batch committed
 mid-fold simply lands in the next version — never lost, never
 double-counted. Two concurrent folds can't double-count either: the
@@ -62,6 +62,7 @@ from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
 from pyspark.sql.streaming import StreamingQuery
 
+from sydradb_spark import objectstore
 from sydradb_spark.ingest import (
     NDJSON_SCHEMA,
     note_maintenance_failure,
@@ -187,7 +188,7 @@ def stream_rollup(
     ``read_rollup_manifested``. Required for object-store rollup locations
     (no flock there); pass ``store`` (an ``objectstore.ObjectStore`` scoped
     to this table) when the manifest itself must live in an object store,
-    else the local manifest protocol is used.
+    else it lives beside the data (``objectstore.resolve``).
 
     ``maintenance_every=k`` (manifested mode only) runs ``vacuum_rollup``
     every k batches — same rationale as the points sink's in-sink vacuum: a
@@ -372,60 +373,11 @@ class _ConcurrentFold(Exception):
     read and our commit — committing would double-count the folded rows."""
 
 
-def _local_manifest_path(rollup_path: str) -> str:
-    """The local path the POSIX manifest protocol operates on. Rejects URI
-    locations: ``manifest.commit_cas`` on 's3a://…' would mkdir a RELATIVE
-    local junk directory and 'commit' into it — the object-store protocol
-    (pass ``store=``) is the only correct manifest home there."""
-    from sydradb_spark.ingest import _posix_checkpoint_path
-
-    local = _posix_checkpoint_path(rollup_path)
-    if local is None:
-        raise ValueError(
-            f"the local manifest protocol cannot live on {rollup_path!r}: "
-            "pass store= (an objectstore.ObjectStore) for object-store "
-            "rollup tables"
-        )
-    return local
-
-
-def _mf_commit(rollup_path: str, store, *, mutate, txn=None):
-    if store is None:
-        from sydradb_spark import manifest as mf
-
-        return mf.commit_cas(_local_manifest_path(rollup_path), mutate=mutate, txn=txn)
-    from sydradb_spark import objectstore as obs
-
-    return obs.commit_cas(store, STORE_TABLE, mutate=mutate, txn=txn)
-
-
-def _mf_read_txn(rollup_path: str, store, app_id: str) -> int | None:
-    if store is None:
-        from sydradb_spark import manifest as mf
-
-        local = _local_manifest_path(rollup_path)
-        if mf.latest_version(local) is None:
-            return None
-        return mf.read_txn(local, app_id)
-    from sydradb_spark import objectstore as obs
-
-    return obs.read_txn(store, STORE_TABLE, app_id)
-
-
-def _mf_files(rollup_path: str, store) -> list[str] | None:
+def _manifest_entries(mstore, key: str) -> list[str] | None:
     """Current manifest entry list (relative names), or None pre-manifest."""
-    if store is None:
-        from sydradb_spark import manifest as mf
-
-        local = _local_manifest_path(rollup_path)
-        if mf.latest_version(local) is None:
-            return None
-        return mf.read_files(local)
-    from sydradb_spark import objectstore as obs
-
-    if obs.latest_version(store, STORE_TABLE) is None:
+    if objectstore.latest_version(mstore, key) is None:
         return None
-    return obs.read_files(store, STORE_TABLE)
+    return objectstore.read_files(mstore, key)
 
 
 def _hadoop_fs(spark: SparkSession, path: str):
@@ -473,6 +425,7 @@ def init_rollup_manifest(
     no manifest yet."""
     from sydradb_spark.ingest import _posix_checkpoint_path
 
+    mstore, key = objectstore.resolve(rollup_path, store, STORE_TABLE)
     local = _posix_checkpoint_path(rollup_path)
     if local is not None:
         root = Path(local)
@@ -498,10 +451,10 @@ def init_rollup_manifest(
         if (is_dir and (name.startswith("b_") or name.startswith("c_")))
         or (not is_dir and name.endswith(".parquet") and name[0] != ".")
     )
-    if not entries and _mf_files(rollup_path, store) is None:
+    if not entries and _manifest_entries(mstore, key) is None:
         return None
-    return _mf_commit(
-        rollup_path, store, mutate=lambda cur: sorted(set(cur) | set(entries))
+    return objectstore.commit_cas(
+        mstore, key, mutate=lambda cur: sorted(set(cur) | set(entries))
     )
 
 
@@ -529,15 +482,16 @@ def write_rollup_batch_manifested(
     touches nothing readers can see; a crash BETWEEN write and commit
     still re-writes, but that dir was never manifest-referenced. Same
     pattern as ``storage.write_points``' replay pre-check."""
-    last = _mf_read_txn(rollup_path, store, app_id)
+    mstore, key = objectstore.resolve(rollup_path, store, STORE_TABLE)
+    last = objectstore.read_txn(mstore, key, app_id)
     if last is not None and last >= batch_id:
         return None  # replayed batch — already durable and folded-safe
     target = _batch_dir(rollup_path, batch_id, app_id)
     partial.write.mode("overwrite").parquet(target)
     name = target.rsplit("/", 1)[1]
-    return _mf_commit(
-        rollup_path,
-        store,
+    return objectstore.commit_cas(
+        mstore,
+        key,
         mutate=lambda cur: sorted(set(cur) | {name}),
         txn=(app_id, batch_id),
     )
@@ -549,7 +503,8 @@ def read_rollup_manifested(
     """Fold the MANIFESTED entries (batch partials + compacted sets) into
     the canonical one-row-per-bucket rollup. Reads only what the manifest
     references — orphaned dirs awaiting ``vacuum_rollup`` are invisible."""
-    names = _mf_files(rollup_path, store) or []
+    mstore, key = objectstore.resolve(rollup_path, store, STORE_TABLE)
+    names = _manifest_entries(mstore, key) or []
     if not names:
         # empty table: an empty rollup frame with the canonical schema
         empty = spark.createDataFrame(
@@ -600,7 +555,8 @@ def compact_rollup_manifested(
     None when there was nothing to fold or a concurrent fold won."""
     import uuid
 
-    names = _mf_files(rollup_path, store)
+    mstore, key = objectstore.resolve(rollup_path, store, STORE_TABLE)
+    names = _manifest_entries(mstore, key)
     if not names:
         return None
     live = _live_tail_names([n for n in names if n.startswith("b_")])
@@ -630,7 +586,7 @@ def compact_rollup_manifested(
         return sorted((cur_set - folded_set) | {out})
 
     try:
-        return _mf_commit(rollup_path, store, mutate=mutate)
+        return objectstore.commit_cas(mstore, key, mutate=mutate)
     except _ConcurrentFold:
         # backend-aware removal: shutil against an s3a:// string would be a
         # silent no-op and leak the aborted fold's output forever
@@ -647,59 +603,34 @@ def vacuum_rollup(
 ) -> list[str]:
     """Reclaim rollup entries (``b_*``/``c_*`` dirs and legacy top-level
     ``*.parquet`` files) unreferenced by the retained manifest versions,
-    and prune old version files. The age window is the reader/replayer
-    guard: an entry whose tree was touched within it (newest mtime anywhere
-    inside — a fold or batch write advances leaf mtimes, not necessarily
-    the dir's own) is never deleted. Returns the removed entry names.
+    and prune old version docs (``objectstore.vacuum_versions``: the last
+    ``keep_versions`` plus any younger than ``min_age_seconds``). The age
+    window is the reader/replayer guard: an entry whose tree was touched
+    within it (newest mtime anywhere inside — a fold or batch write
+    advances leaf mtimes, not necessarily the dir's own) is never deleted.
+    A table with no manifest is left untouched. Returns the removed entry
+    names.
 
-    Backends: the MANIFEST side needs ``store`` for object-store manifests
-    (``store=None`` + a non-POSIX ``rollup_path`` is rejected — the local
-    link-CAS protocol cannot live on s3://). The DATA side walks local
-    paths with the stdlib and URI locations through the Hadoop FileSystem
-    API via ``spark`` — without a session, a non-local data pass is SKIPPED
-    (version pruning still runs; entries wait for a vacuum that has one).
-    The streaming sink's in-sink maintenance always passes its session."""
-    import shutil
+    The manifest lives beside the data unless ``store`` is given (a
+    non-POSIX ``rollup_path`` requires one, ``objectstore.resolve``). The
+    DATA side walks local paths with the stdlib (``storage._reclaim_local``,
+    the points table's pass) and URI locations through the Hadoop
+    FileSystem API via ``spark`` — without a session, a non-local data
+    pass is SKIPPED (version pruning still runs; entries wait for a vacuum
+    that has one). The streaming sink's in-sink maintenance always passes
+    its session."""
     import time
 
-    from sydradb_spark import manifest as mf
     from sydradb_spark.ingest import _posix_checkpoint_path
-    from sydradb_spark.manifest import _tree_mtime
+    from sydradb_spark.storage import _reclaim_local
 
-    local = _posix_checkpoint_path(rollup_path)
-    kept: set[str] = set()
-    if store is None:
-        if local is None:
-            raise ValueError(
-                f"vacuum_rollup with store=None needs a local rollup path, "
-                f"got {rollup_path!r}: the link-CAS manifest protocol has no "
-                "object-store primitive — pass an objectstore-backed store"
-            )
-        # manifest.vacuum's data pass globs hour_bucket=* (a no-op on a
-        # rollup table); it prunes old v*.json + commit temp files for us
-        mf.vacuum(
-            local, keep_versions=keep_versions, min_age_seconds=min_age_seconds
-        )
-        mdir = Path(local) / mf.MANIFEST_DIR
-        if not mdir.exists():
-            return []
-        for p in mdir.glob("v*.json"):
-            try:
-                kept.update(mf.read_files(local, int(p.stem[1:])))
-            except FileNotFoundError:
-                continue  # racing a concurrent vacuum
-    else:
-        from sydradb_spark import objectstore as obs
-
-        obs.vacuum_versions(store, STORE_TABLE, keep_versions=keep_versions)
-        pre = f"{STORE_TABLE}/_manifest/"
-        for key in store.list(pre + "v"):
-            try:
-                kept.update(
-                    obs.read_files(store, STORE_TABLE, int(key[len(pre) + 1 : -5]))
-                )
-            except (ValueError, FileNotFoundError):
-                continue
+    mstore, key = objectstore.resolve(rollup_path, store, STORE_TABLE)
+    if objectstore.latest_version(mstore, key) is None:
+        return []
+    objectstore.vacuum_versions(
+        mstore, key, keep_versions=keep_versions, min_age_seconds=min_age_seconds
+    )
+    kept = objectstore.retained_files(mstore, key)
 
     def _is_entry(name: str, is_dir: bool) -> bool:
         if is_dir:
@@ -709,43 +640,14 @@ def vacuum_rollup(
         # they are reclaimable exactly like a folded batch dir
         return name.endswith(".parquet") and name[0] != "."
 
-    now = time.time()
-    removed = []
+    local = _posix_checkpoint_path(rollup_path)
     if local is not None:
         root = Path(local)
         if not root.exists():
             return []
-        for p in root.iterdir():
-            if not _is_entry(p.name, p.is_dir()) or p.name in kept:
-                continue
-            if now - _tree_mtime(p) < min_age_seconds:
-                continue  # possibly a live writer's target or a fresh fold
-            if p.is_dir():
-                shutil.rmtree(p, ignore_errors=True)
-            else:
-                p.unlink(missing_ok=True)
-            removed.append(p.name)
-    elif spark is not None:
-        # URI data location: list/age/delete through the Hadoop FS API —
-        # Path('s3a://…').iterdir() resolves to a NONEXISTENT local path
-        # and previously crashed the in-sink maintenance (r13 review)
-        _, fs, jroot = _hadoop_fs(spark, rollup_path)
-        if not fs.exists(jroot):
-            return []
-        for st in fs.listStatus(jroot):
-            name = st.getPath().getName()
-            if not _is_entry(name, st.isDirectory()) or name in kept:
-                continue
-            newest = st.getModificationTime() / 1000.0
-            if st.isDirectory():
-                it = fs.listFiles(st.getPath(), True)
-                while it.hasNext():
-                    newest = max(newest, it.next().getModificationTime() / 1000.0)
-            if now - newest < min_age_seconds:
-                continue
-            fs.delete(st.getPath(), True)
-            removed.append(name)
-    else:
+        entries = [p.name for p in root.iterdir() if _is_entry(p.name, p.is_dir())]
+        return _reclaim_local(root, entries, kept, min_age_seconds)
+    if spark is None:
         # no session to reach the URI filesystem — manifest-only vacuum;
         # NOT silent (VERDICT r13 item 4): a bare cron-style
         # vacuum_rollup(store=...) call would otherwise reclaim nothing
@@ -755,4 +657,26 @@ def vacuum_rollup(
             "SparkSession to reach it; only manifest versions were pruned",
             rollup_path,
         )
+        return []
+    # URI data location: list/age/delete through the Hadoop FS API —
+    # Path('s3a://…').iterdir() resolves to a NONEXISTENT local path
+    # and previously crashed the in-sink maintenance
+    now = time.time()
+    removed = []
+    _, fs, jroot = _hadoop_fs(spark, rollup_path)
+    if not fs.exists(jroot):
+        return []
+    for st in fs.listStatus(jroot):
+        name = st.getPath().getName()
+        if not _is_entry(name, st.isDirectory()) or name in kept:
+            continue
+        newest = st.getModificationTime() / 1000.0
+        if st.isDirectory():
+            it = fs.listFiles(st.getPath(), True)
+            while it.hasNext():
+                newest = max(newest, it.next().getModificationTime() / 1000.0)
+        if now - newest < min_age_seconds:
+            continue
+        fs.delete(st.getPath(), True)
+        removed.append(name)
     return sorted(removed)

@@ -102,13 +102,13 @@ def test_sink_maintenance_failure_logged_stream_survives(
     """A persistently failing vacuum no longer fails silently: the stream
     completes (advisory maintenance) AND a warning names the failure."""
     from sydradb_spark import ingest as ing
-    from sydradb_spark import manifest as mf
+    from sydradb_spark import objectstore as obs
     from sydradb_spark.storage import read_points
 
     def boom(*a, **k):
         raise OSError("store permissions")
 
-    monkeypatch.setattr(mf, "vacuum", boom)
+    monkeypatch.setattr(obs, "vacuum_versions", boom)
     src = tmp_path / "src"
     src.mkdir()
     (src / "a.ndjson").write_text('{"series": "m.x", "ts": 100, "value": 1.0}\n')

@@ -70,13 +70,13 @@ def test_retention_filter_and_partition_drop(spark, points, tmp_path, stored):
     # global partition drop: cutoff after every fixture hour → all buckets go.
     # On a manifest table the drop is a metadata commit; physical dirs stay
     # until vacuum (and the pre-drop version remains time-travel readable).
-    from sydradb_spark import manifest as mf
+    from sydradb_spark import objectstore as obs
 
     dropped = storage.drop_expired_partitions(stored, cutoff_hour_bucket=10**10)
     assert dropped
     assert storage.read_points(spark, stored).count() == 0
-    assert mf.read_files(stored) == []
-    mf.vacuum(stored, keep_versions=1, min_age_seconds=0)
+    assert obs.read_files(obs.LocalFSObjectStore(stored), "") == []
+    storage.vacuum_points(stored, keep_versions=1, min_age_seconds=0)
     assert all(not d.startswith("hour_bucket=") for d in os.listdir(stored))
 
 
@@ -453,21 +453,22 @@ def test_overwrite_on_live_manifested_table_is_a_manifest_flip(spark, tmp_path):
     txn ledger included. It is now a staged write + full-replacement
     manifest commit: history and ledgers survive, readers flip atomically,
     old files stay until vacuum."""
-    from sydradb_spark import manifest as mf
+    from sydradb_spark import objectstore as obs
 
     path = str(tmp_path / "tbl")
+    manifest = obs.LocalFSObjectStore(path)
     storage.write_points(_pts_df(spark, [("s.a", 100, 1.0)]), path)
     storage.write_points(
         _pts_df(spark, [("s.a", 200, 2.0)]), path, mode="append",
         txn=("stream-one", 7),
     )
-    v_before = mf.latest_version(path)
-    old_files = set(mf.read_files(path))
+    v_before = obs.latest_version(manifest, "")
+    old_files = set(obs.read_files(manifest, ""))
     storage.write_points(_pts_df(spark, [("s.b", 300, 3.0)]), path, mode="overwrite")
     # manifest history intact: next version, not a rebuilt v1
-    assert mf.latest_version(path) == v_before + 1
+    assert obs.latest_version(manifest, "") == v_before + 1
     # the replay guard survives the overwrite
-    assert mf.read_txn(path, "stream-one") == 7
+    assert obs.read_txn(manifest, "", "stream-one") == 7
     # LATEST is exactly the new data
     back = storage.read_points(spark, path)
     assert [(r["series"], r["ts"]) for r in back.collect()] == [("s.b", 300)]
@@ -480,21 +481,21 @@ def test_delete_where_commit_spares_concurrent_appends(spark, tmp_path, monkeypa
     """r13 review: the DELETE's manifest mutate must drop EXACTLY the files
     its rewrite read — a file committed concurrently into an affected hour
     (rows the predicate never evaluated) has to ride through the commit."""
-    from sydradb_spark import manifest as mf
+    from sydradb_spark import objectstore as obs
 
     path = str(tmp_path / "tbl")
     storage.write_points(
         _pts_df(spark, [("s.a", 100, 1.0), ("s.a", 200, 2.0)]), path
     )
     captured = {}
-    real_commit = mf.commit
+    real_commit = obs.commit_cas
 
-    def spy(p, files=None, *, mutate=None, txn=None):
+    def spy(s, table, files=None, *, mutate=None, txn=None):
         if mutate is not None:
             captured["mutate"] = mutate
-        return real_commit(p, files, mutate=mutate, txn=txn)
+        return real_commit(s, table, files, mutate=mutate, txn=txn)
 
-    monkeypatch.setattr(mf, "commit", spy)
+    monkeypatch.setattr(obs, "commit_cas", spy)
     storage.delete_where(
         spark, path, F.col("value") >= 2.0, ts_min=0, ts_max=4000
     )
@@ -521,7 +522,7 @@ def test_compact_points_all_null_value_group_keeps_identity(spark):
 def test_snapshot_carries_txn_ledger(spark, tmp_path):
     """r13 review: restoring a snapshot without the txn ledger erases the
     streaming replay guard — a checkpoint-replayed batch re-appends."""
-    from sydradb_spark import manifest as mf
+    from sydradb_spark import objectstore as obs
 
     path = str(tmp_path / "tbl")
     storage.write_points(_pts_df(spark, [("s.a", 100, 1.0)]), path)
@@ -531,7 +532,7 @@ def test_snapshot_carries_txn_ledger(spark, tmp_path):
     )
     dest = str(tmp_path / "snap")
     storage.snapshot(path, dest)
-    assert mf.read_txn(dest, "stream-one") == 3
+    assert obs.read_txn(obs.LocalFSObjectStore(dest), "", "stream-one") == 3
     storage.restore(dest, path)
     # the replayed batch is still a no-op after restore
     storage.write_points(

@@ -1,13 +1,22 @@
 """Manifest-committed storage: atomic version flips, crash safety, time
-travel, vacuum (reference MANIFEST swap, src/sydra/storage/manifest.zig)."""
+travel, vacuum (reference MANIFEST swap, src/sydra/storage/manifest.zig).
+
+A table written without ``store=`` keeps its manifest beside the data,
+committed through ``objectstore`` on a ``LocalFSObjectStore`` rooted at the
+table directory under the empty table key (``objectstore.resolve``)."""
 
 from __future__ import annotations
 
 import pytest
 
-from sydradb_spark import manifest as mf
+from sydradb_spark import objectstore as obs
 from sydradb_spark import storage
 from sydradb_spark.sydraql.engine import SydraQLEngine
+
+
+def _local(path) -> obs.LocalFSObjectStore:
+    """The manifest store of a table written without store=."""
+    return obs.LocalFSObjectStore(str(path))
 
 
 @pytest.fixture()
@@ -18,15 +27,14 @@ def table(tmp_path, points):
 
 
 def test_write_creates_manifest_and_roundtrips(spark, points, table):
-    assert mf.has_manifest(table)
-    assert mf.latest_version(table) == 1
+    assert obs.latest_version(_local(table), "") == 1
     assert storage.read_points(spark, table).count() == points.count()
 
 
 def test_append_extends_manifest(spark, points, table):
     extra = points.limit(7)
     storage.write_points(extra, table, mode="append")
-    assert mf.latest_version(table) == 2
+    assert obs.latest_version(_local(table), "") == 2
     assert storage.read_points(spark, table).count() == points.count() + 7
 
 
@@ -34,7 +42,7 @@ def test_delete_commits_atomically_with_time_travel(spark, points, table):
     n0 = storage.read_points(spark, table).count()
     eng = SydraQLEngine(spark, storage_path=table)
     eng.query("delete from cpu.total where time >= 0 and time < 2000000")
-    v = mf.latest_version(table)
+    v = obs.latest_version(_local(table), "")
     assert v == 2
     after = storage.read_points(spark, table)
     assert after.where("series = 'cpu.total'").count() == 0
@@ -59,8 +67,8 @@ def test_crash_before_commit_preserves_old_version(spark, points, table):
     )
     assert storage.read_points(spark, table).count() == n0  # unchanged
     # the next real commit simply ignores the orphaned files; vacuum reaps
-    assert len(mf.data_files(table)) > len(mf.read_files(table))
-    removed = mf.vacuum(table, keep_versions=1, min_age_seconds=0)
+    assert len(storage._data_files(table)) > len(obs.read_files(_local(table), ""))
+    removed = storage.vacuum_points(table, keep_versions=1, min_age_seconds=0)
     assert removed
     assert storage.read_points(spark, table).count() == n0
 
@@ -69,14 +77,14 @@ def test_vacuum_keeps_recent_versions(spark, points, table):
     eng = SydraQLEngine(spark, storage_path=table)
     eng.query("delete from cpu.total where time >= 0 and time < 2000000")
     eng.query("delete from weather.room2 where time >= 0 and time < 2000000")
-    assert mf.latest_version(table) == 3
-    mf.vacuum(table, keep_versions=2, min_age_seconds=0)
+    assert obs.latest_version(_local(table), "") == 3
+    storage.vacuum_points(table, keep_versions=2, min_age_seconds=0)
     # latest and latest-1 remain readable; v1's exclusive files are gone
     for v in (2, 3):
-        files = mf.read_files(table, version=v)
+        files = obs.read_files(_local(table), "", version=v)
         assert all((__import__("pathlib").Path(table) / f).exists() for f in files)
     with pytest.raises(FileNotFoundError):
-        mf.read_files(table, version=1)
+        obs.read_files(_local(table), "", version=1)
 
 
 def test_plain_table_fallback(spark, points, tmp_path):
@@ -87,7 +95,7 @@ def test_plain_table_fallback(spark, points, tmp_path):
         .write.partitionBy("hour_bucket")
         .parquet(path)
     )
-    assert not mf.has_manifest(path)
+    assert obs.latest_version(_local(path), "") is None
     assert storage.read_points(spark, path).count() == points.count()
 
 
@@ -105,7 +113,7 @@ def test_snapshot_is_metadata_only_and_isolated(spark, points, table):
 
     eng = SydraQLEngine(spark, storage_path=table)
     eng.query("delete from cpu.total where time >= 0 and time < 2000000")
-    mf.vacuum(table, keep_versions=1, min_age_seconds=0)
+    storage.vacuum_points(table, keep_versions=1, min_age_seconds=0)
     # live table changed; the snapshot still reads the original rows
     assert storage.read_points(spark, dest).count() == n0
     assert storage.read_points(spark, table).count() < n0
@@ -113,14 +121,15 @@ def test_snapshot_is_metadata_only_and_isolated(spark, points, table):
 
 def test_commit_mutate_merges_under_lock(tmp_path):
     """Concurrent appenders commit via mutate= so the read-modify-write of
-    the file list happens under the flock: no writer's files are dropped
-    from LATEST (the lost-append race ADVICE flagged). With the pre-fix
-    pattern (read_files() outside the lock, then commit(files)) interleaved
-    appenders routinely lose each other's files."""
+    the file list is re-run against the list each CAS attempt replaces: no
+    writer's files are dropped from LATEST (the lost-append race). With
+    the pre-fix pattern (read_files() outside the commit, then
+    commit(files)) interleaved appenders routinely lose each other's
+    files."""
     import threading
 
-    path = str(tmp_path / "mut")
-    mf.commit(path, ["hour_bucket=0/base.parquet"])
+    store = _local(tmp_path / "mut")
+    obs.commit_cas(store, "", ["hour_bucket=0/base.parquet"])
     start = threading.Barrier(2)
     errors: list[Exception] = []
 
@@ -129,7 +138,7 @@ def test_commit_mutate_merges_under_lock(tmp_path):
             start.wait(timeout=10)
             for i in range(10):
                 rel = f"hour_bucket=0/{name}{i}.parquet"
-                mf.commit(path, mutate=lambda old, r=rel: old + [r])
+                obs.commit_cas(store, "", mutate=lambda old, r=rel: old + [r])
         except Exception as e:  # surfaced below — don't swallow in a thread
             errors.append(e)
 
@@ -139,17 +148,17 @@ def test_commit_mutate_merges_under_lock(tmp_path):
     for t in threads:
         t.join(timeout=60)
     assert not errors
-    files = set(mf.read_files(path))
+    files = set(obs.read_files(store, ""))
     assert len(files) == 21  # base + 10 per appender — none lost
-    assert mf.latest_version(path) == 21
+    assert obs.latest_version(store, "") == 21
 
 
 def test_commit_requires_exactly_one_form(tmp_path):
-    path = str(tmp_path / "forms")
+    store = _local(tmp_path / "forms")
     with pytest.raises(ValueError):
-        mf.commit(path)
+        obs.commit_cas(store, "")
     with pytest.raises(ValueError):
-        mf.commit(path, ["f"], mutate=lambda old: old)
+        obs.commit_cas(store, "", ["f"], mutate=lambda old: old)
 
 
 def test_vacuum_age_window_protects_live_readers(spark, points, table):
@@ -160,9 +169,9 @@ def test_vacuum_age_window_protects_live_readers(spark, points, table):
     eng = SydraQLEngine(spark, storage_path=table)
     eng.query("delete from cpu.total where time >= 0 and time < 2000000")
     eng.query("delete from weather.room2 where time >= 0 and time < 2000000")
-    assert mf.latest_version(table) == 3
+    assert obs.latest_version(_local(table), "") == 3
     n1 = storage.read_points_version(spark, table, version=1).count()
-    removed = mf.vacuum(table, keep_versions=1)  # default min_age_seconds
+    removed = storage.vacuum_points(table, keep_versions=1)  # default min_age_seconds
     assert removed == []
     # every version is still fully readable, not just the kept ones
     for v in (1, 2, 3):
@@ -215,7 +224,7 @@ def test_optimize_partitions_merges_small_files(spark, points, tmp_path):
     for i in range(3):  # one file per partition per append
         storage.write_points(points, path, mode="append" if i else "overwrite")
     n0 = storage.read_points(spark, path).count()
-    files_before = mf.read_files(path)
+    files_before = obs.read_files(_local(path), "")
     per_part = {}
     for f in files_before:
         b = f.split("=", 1)[1].split("/", 1)[0]
@@ -224,7 +233,7 @@ def test_optimize_partitions_merges_small_files(spark, points, tmp_path):
 
     optimized = storage.optimize_partitions(spark, path, max_files_per_partition=2)
     assert optimized
-    files_after = mf.read_files(path)
+    files_after = obs.read_files(_local(path), "")
     per_part_after = {}
     for f in files_after:
         b = int(f.split("=", 1)[1].split("/", 1)[0])
@@ -232,20 +241,20 @@ def test_optimize_partitions_merges_small_files(spark, points, tmp_path):
     assert all(per_part_after[b] == 1 for b in optimized)
     assert storage.read_points(spark, path).count() == n0
     # old small files reaped by vacuum, rows unchanged
-    mf.vacuum(path, keep_versions=1, min_age_seconds=0)
+    storage.vacuum_points(path, keep_versions=1, min_age_seconds=0)
     assert storage.read_points(spark, path).count() == n0
 
 
 def test_commit_cas_concurrent_committers(tmp_path):
-    """VERDICT r05 item 8 (multi-host commits): commit_cas is the lockless
-    protocol — a barrier forces both committers to read the SAME base
-    version, so both race for v+1; exactly one wins the exclusive version-
-    file link, the loser retries against the fresh list. No append is lost
-    and every version number is won exactly once."""
+    """Multi-host commits on a table written without store=: commit_cas is
+    the lockless protocol — a barrier forces both committers to read the
+    SAME base version, so both race for v+1; exactly one wins the exclusive
+    version-file link, the loser retries against the fresh list. No append
+    is lost and every version number is won exactly once."""
     import threading
 
-    path = str(tmp_path / "cas")
-    mf.commit_cas(path, ["hour_bucket=0/base.parquet"])
+    store = _local(tmp_path / "cas")
+    obs.commit_cas(store, "", ["hour_bucket=0/base.parquet"])
     collide = threading.Barrier(2)
     errors: list[Exception] = []
 
@@ -263,7 +272,7 @@ def test_commit_cas_concurrent_committers(tmp_path):
                         pass
                     return old + [r]
 
-                mf.commit_cas(path, mutate=merge)
+                obs.commit_cas(store, "", mutate=merge)
         except Exception as e:  # surfaced below — don't swallow in a thread
             errors.append(e)
 
@@ -274,9 +283,9 @@ def test_commit_cas_concurrent_committers(tmp_path):
         t.join(timeout=120)
     collide.abort()
     assert not errors
-    files = set(mf.read_files(path))
+    files = set(obs.read_files(store, ""))
     assert len(files) == 11  # base + 5 per committer — none lost
-    assert mf.latest_version(path) == 11
+    assert obs.latest_version(store, "") == 11
     # every version file exists exactly once, 1..11 with no gaps
     versions = sorted(
         int(p.stem[1:]) for p in (tmp_path / "cas" / "_manifest").glob("v*.json")
@@ -288,24 +297,21 @@ def test_latest_version_survives_stale_pointer(tmp_path):
     """A committed-but-unpointed version (crash or concurrent committer
     between link and pointer advance) is still visible: readers take
     max(pointer hint, listed versions)."""
-    path = str(tmp_path / "stale")
-    mf.commit(path, ["hour_bucket=0/a.parquet"])
-    mf.commit(path, mutate=lambda old: old + ["hour_bucket=0/b.parquet"])
+    store = _local(tmp_path / "stale")
+    obs.commit_cas(store, "", ["hour_bucket=0/a.parquet"])
+    obs.commit_cas(store, "", mutate=lambda old: old + ["hour_bucket=0/b.parquet"])
     # simulate the crash window: pointer regressed to v1
     (tmp_path / "stale" / "_manifest" / "LATEST").write_text("1")
-    assert mf.latest_version(path) == 2
-    assert "hour_bucket=0/b.parquet" in mf.read_files(path)
+    assert obs.latest_version(store, "") == 2
+    assert "hour_bucket=0/b.parquet" in obs.read_files(store, "")
     # the next commit lands on v3 and repairs the pointer
-    mf.commit(path, mutate=lambda old: old + ["hour_bucket=0/c.parquet"])
+    obs.commit_cas(store, "", mutate=lambda old: old + ["hour_bucket=0/c.parquet"])
     assert (tmp_path / "stale" / "_manifest" / "LATEST").read_text() == "3"
 
 
 # ---------------------------------------------------------------------------
-# Object-store commit backend (sydradb_spark.objectstore): the same protocol
-# with the CAS re-based on conditional PUT — VERDICT r06 item 2.
+# The protocol on each concrete store (conditional PUT).
 # ---------------------------------------------------------------------------
-
-from sydradb_spark import objectstore as obs
 
 
 def _store_roundtrip(store):
@@ -368,12 +374,12 @@ def test_objectstore_crashed_committer_visible():
 
 @pytest.mark.parametrize("make_store", ["memory", "localfs"])
 def test_objectstore_concurrent_committers_no_lost_appends(tmp_path, make_store):
-    """The backend-swap twin of test_commit_cas_concurrent_committers: two
-    threads race append commits through the object-store protocol (no
-    flock exists there — contention is absorbed entirely by the
-    conditional-PUT retry loop). A barrier forces both committers to read
-    the SAME base version each round; exactly one wins each conditional
-    PUT, the loser re-reads and retries. No append lost, every version won
+    """Multi-host commits: commit_cas is the lockless
+    protocol — contention is absorbed entirely by the conditional-create
+    retry loop. A barrier forces both committers to read the SAME base
+    version each round, so both race for v+1; exactly one wins each
+    conditional PUT (the exclusive link on localfs), the loser re-reads
+    and retries against the fresh list. No append lost, every version won
     exactly once."""
     import threading
 
@@ -412,6 +418,10 @@ def test_objectstore_concurrent_committers_no_lost_appends(tmp_path, make_store)
     files = set(obs.read_files(store, "tbl"))
     assert len(files) == 11  # base + 5 per committer — none lost
     assert obs.latest_version(store, "tbl") == 11
+    # every version doc exists exactly once, 1..11 with no gaps
+    assert store.list("tbl/_manifest/v") == sorted(
+        f"tbl/_manifest/v{v}.json" for v in range(1, 12)
+    )
     if make_store == "memory":
         # the race actually happened: at least one conditional PUT lost
         assert store.cas_losses >= 1
@@ -440,40 +450,43 @@ def test_localfs_store_key_escape_rejected(tmp_path):
 
 
 def test_commit_txn_replay_is_noop(tmp_path):
-    path = str(tmp_path / "t")
-    assert mf.commit(path, ["a.parquet"], txn=("app", 0)) == 1
-    assert mf.read_txn(path, "app") == 0
+    store = _local(tmp_path / "t")
+    assert obs.commit_cas(store, "", ["a.parquet"], txn=("app", 0)) == 1
+    assert obs.read_txn(store, "", "app") == 0
     # replaying the same txn commits nothing and bumps no version
-    assert mf.commit(path, mutate=lambda old: old + ["dup.parquet"], txn=("app", 0)) is None
-    assert mf.latest_version(path) == 1
-    assert mf.read_files(path) == ["a.parquet"]
+    assert (
+        obs.commit_cas(store, "", mutate=lambda old: old + ["dup.parquet"], txn=("app", 0))
+        is None
+    )
+    assert obs.latest_version(store, "") == 1
+    assert obs.read_files(store, "") == ["a.parquet"]
     # the NEXT txn goes through and the ledger advances
-    assert mf.commit(path, mutate=lambda old: old + ["b.parquet"], txn=("app", 1)) == 2
-    assert mf.read_txn(path, "app") == 1
-    assert mf.read_files(path) == ["a.parquet", "b.parquet"]
+    assert obs.commit_cas(store, "", mutate=lambda old: old + ["b.parquet"], txn=("app", 1)) == 2
+    assert obs.read_txn(store, "", "app") == 1
+    assert obs.read_files(store, "") == ["a.parquet", "b.parquet"]
     # a LOWER txn version is also rejected (replay of an older batch)
-    assert mf.commit(path, mutate=lambda old: old + ["c"], txn=("app", 0)) is None
+    assert obs.commit_cas(store, "", mutate=lambda old: old + ["c"], txn=("app", 0)) is None
 
 
 def test_commit_txn_ledger_is_per_app(tmp_path):
-    path = str(tmp_path / "t")
-    mf.commit(path, ["a"], txn=("app1", 5))
+    store = _local(tmp_path / "t")
+    obs.commit_cas(store, "", ["a"], txn=("app1", 5))
     # a different app_id with the same txn version is independent
-    assert mf.commit(path, mutate=lambda old: old + ["b"], txn=("app2", 5)) == 2
-    assert mf.read_txn(path, "app1") == 5 and mf.read_txn(path, "app2") == 5
+    assert obs.commit_cas(store, "", mutate=lambda old: old + ["b"], txn=("app2", 5)) == 2
+    assert obs.read_txn(store, "", "app1") == 5 and obs.read_txn(store, "", "app2") == 5
     # untxn'd commits carry the ledger forward untouched
-    assert mf.commit(path, mutate=lambda old: old + ["c"]) == 3
-    assert mf.read_txn(path, "app1") == 5
+    assert obs.commit_cas(store, "", mutate=lambda old: old + ["c"]) == 3
+    assert obs.read_txn(store, "", "app1") == 5
 
 
 def test_write_points_txn_replay_skips_append(spark, points, table):
     n = points.count()
     storage.write_points(points.limit(3), table, mode="append", txn=("ck", 0))
     assert storage.read_points(spark, table).count() == n + 3
-    v = mf.latest_version(table)
+    v = obs.latest_version(_local(table), "")
     # replaying batch 0 is a complete no-op: no new version, no new rows
     storage.write_points(points.limit(3), table, mode="append", txn=("ck", 0))
-    assert mf.latest_version(table) == v
+    assert obs.latest_version(_local(table), "") == v
     assert storage.read_points(spark, table).count() == n + 3
     # batch 1 proceeds normally
     storage.write_points(points.limit(2), table, mode="append", txn=("ck", 1))
@@ -485,7 +498,7 @@ def test_write_points_txn_orphan_after_commit_crash(spark, points, table, monkey
     stages fresh files; the first attempt's files stay on disk as manifest-
     orphans but LATEST never references them — no duplicate rows."""
     n = points.count()
-    real_commit = mf.commit
+    real_commit = obs.commit_cas
     calls = {"n": 0}
 
     def crashing_commit(*a, **kw):
@@ -494,17 +507,17 @@ def test_write_points_txn_orphan_after_commit_crash(spark, points, table, monkey
             raise RuntimeError("injected crash before manifest commit")
         return real_commit(*a, **kw)
 
-    monkeypatch.setattr(mf, "commit", crashing_commit)
+    monkeypatch.setattr(obs, "commit_cas", crashing_commit)
     with pytest.raises(RuntimeError, match="injected crash"):
         storage.write_points(points.limit(3), table, mode="append", txn=("ck", 0))
     # durable state unchanged; staged files are unreferenced orphans
     assert storage.read_points(spark, table).count() == n
-    assert len(mf.data_files(table)) > len(mf.read_files(table))
+    assert len(storage._data_files(table)) > len(obs.read_files(_local(table), ""))
     # the replayed batch commits exactly once
     storage.write_points(points.limit(3), table, mode="append", txn=("ck", 0))
     assert storage.read_points(spark, table).count() == n + 3
     # vacuum reclaims the first attempt's orphans
-    removed = mf.vacuum(table, keep_versions=99, min_age_seconds=0)
+    removed = storage.vacuum_points(table, keep_versions=99, min_age_seconds=0)
     assert removed
     assert storage.read_points(spark, table).count() == n + 3
 
@@ -530,14 +543,17 @@ def test_vacuum_repeated_with_holes(tmp_path):
     vacuum must skip the holes, not read them (crashed the streaming
     sink's second maintenance pass before the r11 fix)."""
     path = str(tmp_path / "t")
+    store = _local(path)
     for i in range(6):
-        mf.commit(path, mutate=lambda old, i=i: old + [f"f{i}.parquet"])
-    assert mf.vacuum(path, keep_versions=1, min_age_seconds=0) == []
+        obs.commit_cas(store, "", mutate=lambda old, i=i: old + [f"f{i}.parquet"])
+    assert storage.vacuum_points(path, keep_versions=1, min_age_seconds=0) == []
     assert [p.name for p in (tmp_path / "t" / "_manifest").glob("v*.json")] == ["v6.json"]
     # more commits, then vacuum again across the v1-v5 hole
-    mf.commit(path, mutate=lambda old: old + ["g.parquet"])
-    assert mf.vacuum(path, keep_versions=1, min_age_seconds=0) == []
-    assert mf.read_files(path) == sorted([f"f{i}.parquet" for i in range(6)] + ["g.parquet"])
+    obs.commit_cas(store, "", mutate=lambda old: old + ["g.parquet"])
+    assert storage.vacuum_points(path, keep_versions=1, min_age_seconds=0) == []
+    assert obs.read_files(store, "") == sorted(
+        [f"f{i}.parquet" for i in range(6)] + ["g.parquet"]
+    )
 
 
 def test_compact_storage_preserves_txn_ledger(spark, points, table):
@@ -547,7 +563,7 @@ def test_compact_storage_preserves_txn_ledger(spark, points, table):
     n0 = storage.read_points(spark, table).count()
     storage.write_points(points.limit(4), table, mode="append", txn=("ck", 3))
     storage.compact_storage(spark, table)
-    assert mf.read_txn(table, "ck") == 3
+    assert obs.read_txn(_local(table), "", "ck") == 3
     # replay of batch 3 after compaction: no duplicates
     before = storage.read_points(spark, table).count()
     storage.write_points(points.limit(4), table, mode="append", txn=("ck", 3))
@@ -563,33 +579,31 @@ def test_commit_cas_retries_through_vacuumed_current_version(tmp_path, monkeypat
     concurrent committer can advance LATEST and a concurrent vacuum can
     prune v{cur} — the read raises FileNotFoundError and must be absorbed
     as one more lost CAS attempt, not an unhandled crash."""
-    path = str(tmp_path / "t")
-    mf.commit(path, ["a"], txn=("app", 0))
-    real_read = mf._read_doc
+    store = _local(tmp_path / "t")
+    obs.commit_cas(store, "", ["a"], txn=("app", 0))
+    real_read = obs._read_doc
     calls = {"n": 0}
 
-    def racing_read(p, version):
+    def racing_read(s, table, version):
         calls["n"] += 1
         if calls["n"] == 1:
             # simulate the prune landing between the listing and this read
             raise FileNotFoundError(f"v{version}.json pruned by vacuum")
-        return real_read(p, version)
+        return real_read(s, table, version)
 
-    monkeypatch.setattr(mf, "_read_doc", racing_read)
-    assert mf.commit_cas(path, mutate=lambda old: old + ["b"], txn=("app", 1)) == 2
+    monkeypatch.setattr(obs, "_read_doc", racing_read)
+    assert obs.commit_cas(store, "", mutate=lambda old: old + ["b"], txn=("app", 1)) == 2
     assert calls["n"] >= 2  # first attempt lost, retry won
-    assert mf.read_files(path) == ["a", "b"]
-    assert mf.read_txn(path, "app") == 1
+    assert obs.read_files(store, "") == ["a", "b"]
+    assert obs.read_txn(store, "", "app") == 1
 
 
 def test_objectstore_commit_cas_retries_through_vacuumed_version(monkeypatch):
-    """Same vacuum race on the object-store protocol: a pruned v{cur} GET
+    """Same vacuum race on a keyed memory store: a pruned v{cur} GET
     inside the CAS loop retries instead of raising."""
-    import sydradb_spark.objectstore as obs_mod
-
-    store = obs_mod.MemoryObjectStore()
-    obs_mod.commit_cas(store, "t", ["a"], txn=("app", 0))
-    real_read = obs_mod._read_doc
+    store = obs.MemoryObjectStore()
+    obs.commit_cas(store, "t", ["a"], txn=("app", 0))
+    real_read = obs._read_doc
     calls = {"n": 0}
 
     def racing_read(s, table, version):
@@ -598,13 +612,10 @@ def test_objectstore_commit_cas_retries_through_vacuumed_version(monkeypatch):
             raise FileNotFoundError(f"missing manifest v{version} for {table}")
         return real_read(s, table, version)
 
-    monkeypatch.setattr(obs_mod, "_read_doc", racing_read)
-    assert (
-        obs_mod.commit_cas(store, "t", mutate=lambda old: old + ["b"], txn=("app", 1))
-        == 2
-    )
+    monkeypatch.setattr(obs, "_read_doc", racing_read)
+    assert obs.commit_cas(store, "t", mutate=lambda old: old + ["b"], txn=("app", 1)) == 2
     assert calls["n"] >= 2
-    assert obs_mod.read_files(store, "t") == ["a", "b"]
+    assert obs.read_files(store, "t") == ["a", "b"]
 
 
 def test_write_points_txn_overwrite_replay_is_noop(spark, points, table):
@@ -614,15 +625,15 @@ def test_write_points_txn_overwrite_replay_is_noop(spark, points, table):
     The pre-check now applies to every mode: the replay never touches disk."""
     storage.write_points(points.limit(3), table, mode="append", txn=("ck", 7))
     n = storage.read_points(spark, table).count()
-    v = mf.latest_version(table)
+    v = obs.latest_version(_local(table), "")
     # replayed txn in overwrite mode: full no-op, table still readable
     storage.write_points(points.limit(1), table, mode="overwrite", txn=("ck", 7))
-    assert mf.latest_version(table) == v
+    assert obs.latest_version(_local(table), "") == v
     assert storage.read_points(spark, table).count() == n
     # a NEW txn in overwrite mode still overwrites (legitimate use)
     storage.write_points(points.limit(2), table, mode="overwrite", txn=("ck", 8))
     assert storage.read_points(spark, table).count() == 2
-    assert mf.read_txn(table, "ck") == 8
+    assert obs.read_txn(_local(table), "", "ck") == 8
 
 
 def test_write_points_concurrent_appenders_thread_race(spark, points, table):
@@ -655,9 +666,9 @@ def test_write_points_concurrent_appenders_thread_race(spark, points, table):
     expect = n0 + 2 * rounds * per_batch
     assert storage.read_points(spark, table).count() == expect
     # LATEST references exactly the files on disk (no stranded staging)
-    assert sorted(mf.read_files(table)) == mf.data_files(table)
-    assert mf.read_txn(table, "app0") == rounds - 1
-    assert mf.read_txn(table, "app1") == rounds - 1
+    assert sorted(obs.read_files(_local(table), "")) == storage._data_files(table)
+    assert obs.read_txn(_local(table), "", "app0") == rounds - 1
+    assert obs.read_txn(_local(table), "", "app1") == rounds - 1
     from pathlib import Path
 
     assert not list(Path(table).glob(".staging-*"))
@@ -671,11 +682,8 @@ def test_vacuum_spares_staging_with_fresh_leaves(tmp_path):
     import os
     import time
 
-    from sydradb_spark import manifest as mf
-
     table = tmp_path / "tbl"
-    (table / "_manifest").mkdir(parents=True)
-    mf.commit(str(table), [])
+    obs.commit_cas(_local(table), "", [])
     old = time.time() - 7200
     # crashed staging: root AND leaves old → reclaimed
     dead = table / ".staging-dead"
@@ -688,41 +696,39 @@ def test_vacuum_spares_staging_with_fresh_leaves(tmp_path):
     live.mkdir()
     (live / "part-0.parquet").write_bytes(b"x")
     os.utime(live, (old, old))
-    mf.vacuum(str(table), min_age_seconds=600)
+    storage.vacuum_points(str(table), min_age_seconds=600)
     assert not dead.exists()
     assert live.exists()  # fresh leaf kept the whole tree alive
 
 
-def test_vacuum_spares_concurrently_committed_version(tmp_path):
+def test_vacuum_spares_concurrently_committed_version(tmp_path, monkeypatch):
     """r13 review (severe): a version committed DURING a vacuum is above the
-    vacuum's snapshot and must survive the version-json prune — unlinking it
+    vacuum's snapshot and must survive the version-doc prune — unlinking it
     left LATEST pointing at a deleted manifest, bricking reads AND commits."""
-    from sydradb_spark import manifest as mf
-
     table = str(tmp_path / "tbl")
+    store = _local(table)
     for i in range(5):
-        mf.commit(table, [f"f{i}"])
-    # simulate the race: the prune loop iterates glob('v*.json') AFTER a
-    # concurrent committer landed v6 — with min_age=0 nothing is 'young',
-    # so only the <= snapshot bound protects it. Patch data_files to inject
-    # the commit mid-vacuum (between the keep-set build and the prune).
-    real_data_files = mf.data_files
+        obs.commit_cas(store, "", [f"f{i}"])
+    # simulate the race: a concurrent committer lands v6 right after the
+    # vacuum took its snapshot of the latest version — with min_age=0
+    # nothing is 'young', so only the <= snapshot bound protects it
+    real_latest = obs.latest_version
     fired = {"done": False}
 
-    def inject_then_list(path):
+    def snapshot_then_commit(s, t):
+        v = real_latest(s, t)
         if not fired["done"]:
             fired["done"] = True
-            mf.commit(path, ["f_concurrent"])
-        return real_data_files(path)
+            obs.commit_cas(s, t, ["f_concurrent"])
+        return v
 
-    mf.data_files = inject_then_list
-    try:
-        mf.vacuum(table, keep_versions=2, min_age_seconds=0)
-    finally:
-        mf.data_files = real_data_files
-    assert mf.latest_version(table) == 6
-    assert mf.read_files(table) == ["f_concurrent"]  # readable, not bricked
-    mf.commit(table, mutate=lambda old: old + ["f_next"])  # committable too
+    monkeypatch.setattr(obs, "latest_version", snapshot_then_commit)
+    obs.vacuum_versions(store, "", keep_versions=2, min_age_seconds=0)
+    monkeypatch.setattr(obs, "latest_version", real_latest)
+    assert fired["done"]
+    assert obs.latest_version(store, "") == 6
+    assert obs.read_files(store, "") == ["f_concurrent"]  # readable, not bricked
+    obs.commit_cas(store, "", mutate=lambda old: old + ["f_next"])  # committable too
 
 
 def test_vacuum_keeps_fresh_partition_dir_with_only_hidden_crc(tmp_path):
@@ -733,11 +739,8 @@ def test_vacuum_keeps_fresh_partition_dir_with_only_hidden_crc(tmp_path):
     import os
     import time
 
-    from sydradb_spark import manifest as mf
-
     table = tmp_path / "tbl"
-    (table / "_manifest").mkdir(parents=True)
-    mf.commit(str(table), [])
+    obs.commit_cas(_local(table), "", [])
     fresh = table / "hour_bucket=0"
     fresh.mkdir()
     (fresh / ".part-0.parquet.crc").write_bytes(b"x")  # appender mid-rename
@@ -747,18 +750,16 @@ def test_vacuum_keeps_fresh_partition_dir_with_only_hidden_crc(tmp_path):
     old = time.time() - 7200
     os.utime(stale / ".leftover.crc", (old, old))
     os.utime(stale, (old, old))
-    mf.vacuum(str(table), min_age_seconds=600)
+    storage.vacuum_points(str(table), min_age_seconds=600)
     assert (fresh / ".part-0.parquet.crc").exists()  # young: kept
     assert not stale.exists()  # genuinely stale leftovers: pruned
 
 
-def test_concurrent_vacuums_tolerate_each_other(tmp_path):
+def test_concurrent_vacuums_tolerate_each_other(tmp_path, monkeypatch):
     """r13 review: the second of two racing vacuums must not crash on a
     file the first already unlinked (missing_ok on the data prune)."""
     import os
     import time
-
-    from sydradb_spark import manifest as mf
 
     table = tmp_path / "tbl"
     d = table / "hour_bucket=0"
@@ -766,22 +767,18 @@ def test_concurrent_vacuums_tolerate_each_other(tmp_path):
     (d / "part-dead.parquet").write_bytes(b"x")
     old = time.time() - 7200
     os.utime(d / "part-dead.parquet", (old, old))
-    mf.commit(str(table), [])  # dead file is unreferenced
-    real_young = mf.vacuum.__globals__  # no seam needed: delete mid-listing
-    # simulate the loser: remove the file after data_files() listed it
-    real_data_files = mf.data_files
+    obs.commit_cas(_local(table), "", [])  # dead file is unreferenced
+    # simulate the loser: remove the file after the data listing saw it
+    real_data_files = storage._data_files
 
-    def list_then_steal(path):
-        rels = real_data_files(path)
+    def list_then_steal(path, spark=None):
+        rels = real_data_files(path, spark)
         for rel in rels:
             (table / rel).unlink(missing_ok=True)  # the winner got there first
         return rels
 
-    mf.data_files = list_then_steal
-    try:
-        removed = mf.vacuum(str(table), min_age_seconds=600)
-    finally:
-        mf.data_files = real_data_files
+    monkeypatch.setattr(storage, "_data_files", list_then_steal)
+    removed = storage.vacuum_points(str(table), min_age_seconds=600)
     # the loser neither crashes nor double-claims: the missing file stats
     # as 'young' (racing its deleter) and is skipped entirely
     assert removed == []
@@ -790,13 +787,93 @@ def test_concurrent_vacuums_tolerate_each_other(tmp_path):
 
 def test_latest_version_survives_corrupt_pointer(tmp_path):
     """r13 review: a truncated/empty LATEST hint must not brick the table —
-    the listed versions are the source of truth (objectstore twin parity)."""
-    from sydradb_spark import manifest as mf
-
-    table = str(tmp_path / "tbl")
-    mf.commit(table, ["f0"])
-    mf.commit(table, ["f0", "f1"])
+    the listed versions are the source of truth."""
+    store = _local(tmp_path / "tbl")
+    obs.commit_cas(store, "", ["f0"])
+    obs.commit_cas(store, "", ["f0", "f1"])
     (tmp_path / "tbl" / "_manifest" / "LATEST").write_text("")  # corrupt
-    assert mf.latest_version(table) == 2
-    assert mf.read_files(table) == ["f0", "f1"]
-    assert mf.commit(table, mutate=lambda old: old + ["f2"]) == 3
+    assert obs.latest_version(store, "") == 2
+    assert obs.read_files(store, "") == ["f0", "f1"]
+    assert obs.commit_cas(store, "", mutate=lambda old: old + ["f2"]) == 3
+
+
+def test_commit_doc_bytes(tmp_path):
+    """A new commit's version doc and LATEST hint are byte-equal to the
+    format every existing table was written in: ``{"version", "files"
+    (sorted), "txn"?}`` as ``json.dumps`` renders it, and the bare version
+    number. Nothing else is left in ``_manifest/``."""
+    store = _local(tmp_path / "t")
+    obs.commit_cas(
+        store, "", ["hour_bucket=3600/b.parquet", "hour_bucket=0/a.parquet"],
+        txn=("app", 3),
+    )
+    obs.commit_cas(
+        store, "", mutate=lambda old: old + ["hour_bucket=0/c.parquet"], txn=("other", 0)
+    )
+    obs.commit_replace(store, "", ["hour_bucket=0/c.parquet"], None)
+    mdir = tmp_path / "t" / "_manifest"
+    assert (mdir / "v1.json").read_bytes() == (
+        b'{"version": 1, "files": ["hour_bucket=0/a.parquet", '
+        b'"hour_bucket=3600/b.parquet"], "txn": {"app": 3}}'
+    )
+    assert (mdir / "v2.json").read_bytes() == (
+        b'{"version": 2, "files": ["hour_bucket=0/a.parquet", '
+        b'"hour_bucket=0/c.parquet", "hour_bucket=3600/b.parquet"], '
+        b'"txn": {"app": 3, "other": 0}}'
+    )
+    assert (mdir / "v3.json").read_bytes() == (
+        b'{"version": 3, "files": ["hour_bucket=0/c.parquet"]}'
+    )
+    assert (mdir / "LATEST").read_bytes() == b"3"
+    assert sorted(p.name for p in mdir.iterdir()) == [
+        "LATEST", "v1.json", "v2.json", "v3.json",
+    ]
+
+
+def test_reads_table_committed_in_earlier_format(spark, points, tmp_path):
+    """A table committed by the earlier same-host-flock committer: literal
+    ``v1.json``/``LATEST`` bytes plus the empty ``COMMIT_LOCK`` file it
+    left in ``_manifest/``. It reads, replays, appends, compacts and
+    vacuums unchanged, and the lock file is ignored."""
+    import os
+
+    from pyspark.sql import functions as F
+
+    path = tmp_path / "old"
+    two_hours = points.where(F.col("ts") < 1_000_000 + 600).select(*storage.POINT_COLS)
+    two_hours.coalesce(1).write.partitionBy("hour_bucket").parquet(str(path))
+    names = []
+    for i, f in enumerate(sorted(path.glob("hour_bucket=*/*.parquet"))):
+        f.with_name(f".{f.name}.crc").unlink(missing_ok=True)
+        dst = f.with_name(f"part-0000{i}-old.c000.snappy.parquet")
+        os.rename(f, dst)
+        names.append(str(dst.relative_to(path)))
+    assert names == ["hour_bucket=997200/part-00000-old.c000.snappy.parquet"]
+    mdir = path / "_manifest"
+    mdir.mkdir()
+    (mdir / "v1.json").write_bytes(
+        b'{"version": 1, "files": '
+        b'["hour_bucket=997200/part-00000-old.c000.snappy.parquet"], '
+        b'"txn": {"app-old": 4}}'
+    )
+    (mdir / "LATEST").write_bytes(b"1")
+    (mdir / "COMMIT_LOCK").write_bytes(b"")
+    table = str(path)
+    n0 = two_hours.count()
+    assert storage.read_points(spark, table).count() == n0
+    assert obs.read_txn(_local(table), "", "app-old") == 4
+    # a replayed batch is still a no-op, the next one appends
+    extra = points.limit(3)
+    storage.write_points(extra, table, mode="append", txn=("app-old", 4))
+    assert storage.read_points(spark, table).count() == n0
+    storage.write_points(extra, table, mode="append", txn=("app-old", 5))
+    assert obs.latest_version(_local(table), "") == 2
+    assert storage.read_points(spark, table).count() == n0 + 3
+    storage.compact_storage(spark, table)
+    compacted = storage.read_points(spark, table).count()
+    assert compacted <= n0 + 3
+    storage.vacuum_points(table, keep_versions=1, min_age_seconds=0)
+    assert storage.read_points(spark, table).count() == compacted
+    assert obs.read_txn(_local(table), "", "app-old") == 5
+    assert (mdir / "COMMIT_LOCK").exists()
+    assert sorted(p.name for p in mdir.glob("v*.json")) == ["v3.json"]

@@ -1,12 +1,12 @@
-"""Points table on both manifest backends (r14, VERDICT r13 items 1+2).
+"""Points table with its manifest beside the data or in an object store.
 
-The PRIMARY table gets the same two-backend seam the rollup table got in
-r13: store=None → the local link(2)-CAS protocol, POSIX paths only, with
-every Path/shutil-based entry point rejecting URI locations LOUDLY
-(``Path('s3a://…')`` is a relative local junk directory — the ledger would
-silently land on the driver's disk while the data goes to the store);
-store=<ObjectStore> → the conditional-PUT protocol, with URI data
-locations routed through the Hadoop FS API.
+One commit protocol (``objectstore``), two homes for the manifest:
+store=None → ``<table>/_manifest/`` through a ``LocalFSObjectStore`` on
+the table directory, POSIX paths only, every entry point rejecting URI
+locations LOUDLY (``Path('s3a://…')`` is a relative local junk directory —
+the ledger would silently land on a local disk while the data goes to
+the store); store=<ObjectStore> → the manifest in that store, with URI
+data locations routed through the Hadoop FS API.
 
 Also pins the r14 manifest-flip re-plumb of ``compact_storage`` /
 ``restore`` (VERDICT r13 item 2): no reader-visible absence window, and
@@ -18,7 +18,6 @@ from __future__ import annotations
 import pytest
 from pyspark.sql import functions as F
 
-from sydradb_spark import manifest as mf
 from sydradb_spark import objectstore as obs
 from sydradb_spark import storage
 from sydradb_spark.storage import POINTS_STORE_TABLE
@@ -42,8 +41,12 @@ def backend(request):
     return lambda: obs.MemoryObjectStore()
 
 
+def _manifest(path, store):
+    return obs.resolve(path, store, POINTS_STORE_TABLE)
+
+
 def _latest(path, store):
-    return storage._pm_latest(path, store)
+    return obs.latest_version(*_manifest(path, store))
 
 
 # --- write/read/append/overwrite roundtrip ------------------------------------
@@ -106,10 +109,8 @@ def test_posix_only_entry_points_reject_uri_paths(spark):
         storage.restore(uri, "/tmp/live-never-created")
     with pytest.raises(ValueError):
         storage.vacuum_points(uri)
-    with pytest.raises(ValueError):
-        mf.commit(uri, [])
-    with pytest.raises(ValueError):
-        mf.vacuum(uri)
+    with pytest.raises(ValueError, match="store="):
+        obs.resolve(uri, None, POINTS_STORE_TABLE)
     from sydradb_spark.ingest import init_points_table
 
     with pytest.raises(ValueError, match="store="):
@@ -177,7 +178,7 @@ def test_vacuum_points_store_reclaims_old_versions(spark, tmp_path):
     store = obs.MemoryObjectStore()
     path = str(tmp_path / "tbl")
     storage.write_points(_pts(spark, [("s.a", 100, 1.0)]), path, store=store)
-    v1_files = set(storage._pm_files(path, store, version=1))
+    v1_files = set(obs.read_files(store, POINTS_STORE_TABLE, 1))
     storage.write_points(_pts(spark, [("s.b", 200, 2.0)]), path, store=store)
     removed = storage.vacuum_points(
         path, store, keep_versions=1, min_age_seconds=0
@@ -215,7 +216,8 @@ def test_drop_expired_and_optimize_and_delete_store_backend(spark, tmp_path):
     targets = storage.optimize_partitions(spark, path, 2, store=store)
     assert targets == [3600]
     by_part = [
-        f for f in storage._pm_files(path, store) if f.startswith("hour_bucket=3600/")
+        f for f in obs.read_files(store, POINTS_STORE_TABLE)
+        if f.startswith("hour_bucket=3600/")
     ]
     assert len(by_part) == 1
     assert storage.read_points(spark, path, store=store).count() == 7
@@ -272,7 +274,7 @@ def test_compact_storage_flip_no_reader_absence_window(spark, tmp_path, backend)
     got = storage.read_points(spark, path, store=store)
     assert got.count() == 2
     assert got.where("ts = 100").collect()[0]["value"] == 5.0  # last-wins
-    assert storage._pm_read_txn(path, store, "app-x") == 3  # ledger carried
+    assert obs.read_txn(*_manifest(path, store), "app-x") == 3  # ledger carried
     if store is None:
         # the live table directory was never renamed away
         assert not (tmp_path / "tbl.old").exists()
@@ -288,20 +290,20 @@ def test_compact_storage_flip_spares_concurrent_append(spark, tmp_path, backend)
     storage.write_points(
         _pts(spark, [("s.a", 100, 1.0), ("s.a", 100, 2.0)]), path, store=store
     )
-    orig_commit = storage._pm_commit
+    orig_commit = obs.commit_cas
     raced = {"done": False}
 
-    def racing_commit(p, s, files=None, *, mutate=None, txn=None):
+    def racing_commit(s, table, files=None, *, mutate=None, txn=None):
         if not raced["done"]:
             raced["done"] = True
             storage.write_points(
-                _pts(spark, [("s.z", 9999, 7.0)]), p, mode="append", store=s
+                _pts(spark, [("s.z", 9999, 7.0)]), path, mode="append", store=store
             )
-        return orig_commit(p, s, files, mutate=mutate, txn=txn)
+        return orig_commit(s, table, files, mutate=mutate, txn=txn)
 
     import unittest.mock as um
 
-    with um.patch.object(storage, "_pm_commit", racing_commit):
+    with um.patch.object(obs, "commit_cas", racing_commit):
         storage.compact_storage(spark, path, store=store)
     got = storage.read_points(spark, path, store=store)
     assert got.count() == 2  # 1 deduped + the concurrent append
@@ -326,7 +328,7 @@ def test_restore_flip_rewinds_data_and_ledger(spark, tmp_path, backend):
     got = storage.read_points(spark, path, store=store)
     assert got.count() == 1 and got.collect()[0]["value"] == 1.0
     # the replay guard REWOUND with the data: batch 6 can re-append
-    assert storage._pm_read_txn(path, store, "app-s") == 5
+    assert obs.read_txn(*_manifest(path, store), "app-s") == 5
     if store is None:
         assert not (tmp_path / "tbl.old").exists()  # no swap happened
     storage.write_points(
@@ -430,6 +432,124 @@ def test_write_points_store_empty_append_still_commits_txn(spark, tmp_path):
     )
     assert obs.read_txn(store, POINTS_STORE_TABLE, "app-e") == 0
     assert storage.read_points(spark, path, store=store).count() == 0
+
+
+# --- adopt-on-first-commit, empty-store vacuum, one-version snapshot ----------
+def _plain_table(spark, path, rows):
+    """A table written straight by Spark: data files, no manifest."""
+    _pts(spark, rows).write.partitionBy("hour_bucket").parquet(path)
+
+
+def test_append_to_manifestless_table_keeps_its_rows(spark, tmp_path, backend):
+    """The first commit on a table without a manifest adopts the data files
+    already on disk: a store-mode append used to commit v1 = only the new
+    files, and every older row vanished from reads."""
+    store = backend()
+    path = str(tmp_path / "tbl")
+    _plain_table(spark, path, [("s.a", 100, 1.0), ("s.a", 3700, 2.0)])
+    before = spark.read.parquet(path).count()
+    storage.write_points(
+        _pts(spark, [("s.b", 200, 3.0)]), path, mode="append", store=store
+    )
+    assert storage.read_points(spark, path, store=store).count() == before + 1
+
+
+def test_vacuum_points_empty_store_removes_nothing(spark, tmp_path):
+    """A store without a manifest has no keep-set to reclaim against: the
+    vacuum used to build an empty one and delete every data file older
+    than the window."""
+    import os
+    import time
+
+    path = tmp_path / "tbl"
+    _plain_table(spark, str(path), [("s.a", 100, 1.0), ("s.a", 3700, 2.0)])
+    files = sorted(path.glob("hour_bucket=*/*.parquet"))
+    old = time.time() - 7200
+    for f in files:
+        os.utime(f, (old, old))
+    removed = storage.vacuum_points(
+        str(path), store=obs.MemoryObjectStore(), min_age_seconds=0
+    )
+    assert removed == []
+    assert all(f.exists() for f in files)
+    assert spark.read.parquet(str(path)).count() == 2
+
+
+def test_snapshot_files_and_ledger_from_one_version(spark, tmp_path, monkeypatch, backend):
+    """The snapshot's file list and txn ledger come from ONE manifest
+    version. A txn-ledgered append committed while the snapshot hardlinks
+    its files used to leak into the snapshot's ledger but not its files:
+    after a restore, that batch's replay would be skipped as durable and
+    its rows lost."""
+    import os
+
+    store = backend()
+    path = str(tmp_path / "tbl")
+    storage.write_points(
+        _pts(spark, [("s.a", 100, 1.0)]), path, txn=("app-r", 0), store=store
+    )
+    real_link = os.link
+    fired = {"done": False}
+
+    def link_after_append(src, dst, *a, **kw):
+        if not fired["done"]:
+            fired["done"] = True
+            storage.write_points(
+                _pts(spark, [("s.a", 200, 2.0)]), path, mode="append",
+                txn=("app-r", 1), store=store,
+            )
+        return real_link(src, dst, *a, **kw)
+
+    monkeypatch.setattr(os, "link", link_after_append)
+    dest = str(tmp_path / "snap")
+    storage.snapshot(path, dest, store=store)
+    monkeypatch.setattr(os, "link", real_link)
+    assert fired["done"]
+    assert storage.read_points(spark, dest).count() == 1
+    assert obs.read_ledger(obs.LocalFSObjectStore(dest), "") == {"app-r": 0}
+    # so restoring it and replaying batch 1 re-appends the batch
+    storage.restore(dest, path, store=store)
+    storage.write_points(
+        _pts(spark, [("s.a", 200, 2.0)]), path, mode="append",
+        txn=("app-r", 1), store=store,
+    )
+    assert storage.read_points(spark, path, store=store).count() == 2
+
+
+def test_written_files_sorted_by_series_ts(spark, tmp_path, backend):
+    """Every data file a write leaves is (series_id, ts)-sorted — the
+    layout contract row-group stats skipping relies on, which a planner
+    rewrite once silently voided (the write kept the hour clustering and
+    dropped the user sort). Covers the first write and an append, since
+    both stage their files through the same layout."""
+    import random
+
+    import pyarrow.parquet as pq
+
+    store = backend()
+    path = tmp_path / "tbl"
+    rng = random.Random(5)
+
+    def shuffled_batch():
+        rows = [
+            (s, ts, float(i))
+            for i, (s, ts) in enumerate(
+                (s, rng.randrange(0, 2 * 3600))
+                for s in ("m.a", "m.b", "m.c", "m.d")
+                for _ in range(60)
+            )
+        ]
+        rng.shuffle(rows)
+        return _pts(spark, rows)
+
+    storage.write_points(shuffled_batch(), str(path), store=store)
+    storage.write_points(shuffled_batch(), str(path), mode="append", store=store)
+    files = sorted(path.glob("hour_bucket=*/*.parquet"))
+    assert len(files) >= 4  # two hours, two writes
+    for f in files:
+        t = pq.read_table(f, columns=["series_id", "ts"])
+        keys = list(zip(t.column("series_id").to_pylist(), t.column("ts").to_pylist()))
+        assert keys == sorted(keys), f"{f.name} is not (series_id, ts)-sorted"
 
 
 # --- full engine surface on a store-backed table (r14 completion) --------------
@@ -609,12 +729,5 @@ def test_points_table_random_op_sequence_matches_model(spark, tmp_path, backend,
             storage.restore(dest, path, store=store)
             model = list(snapshots[dest])
             # the ledger rewinds with the data: later txn versions re-apply
-            txn_high = -1 if store is None else txn_high
-            from sydradb_spark import manifest as _m
-            from sydradb_spark import objectstore as _o
-
-            txn_high = (
-                _m.read_ledger(path) if store is None
-                else _o.read_ledger(store, POINTS_STORE_TABLE)
-            ).get("app-model", -1)
+            txn_high = obs.read_ledger(*_manifest(path, store)).get("app-model", -1)
         check(step, op)

@@ -431,9 +431,11 @@ def test_manifest_txn_protocol_model(tmp_path_factory, ops):
     pure-Python model: the file list is never corrupted, the per-app
     ledger is monotone and carried through every commit and vacuum, and a
     replayed (already-ledgered) txn never commits."""
-    from sydradb_spark import manifest as mf
+    from sydradb_spark import objectstore as obs
+    from sydradb_spark.storage import vacuum_points
 
     path = str(tmp_path_factory.mktemp("txnprop") / "t")
+    store = obs.LocalFSObjectStore(path)
     model_files: list = []
     model_txn: dict = {}
     seq = 0
@@ -443,7 +445,7 @@ def test_manifest_txn_protocol_model(tmp_path_factory, ops):
             seq += 1
             txn = None if app is None else (app, arg)
             expect_noop = txn is not None and model_txn.get(app, -1) >= arg
-            got = mf.commit(path, mutate=lambda old, f=f: old + [f], txn=txn)
+            got = obs.commit_cas(store, "", mutate=lambda old, f=f: old + [f], txn=txn)
             if expect_noop:
                 assert got is None
             else:
@@ -452,11 +454,11 @@ def test_manifest_txn_protocol_model(tmp_path_factory, ops):
                 if txn is not None:
                     model_txn[app] = arg
         else:  # vacuum
-            mf.vacuum(path, keep_versions=arg, min_age_seconds=0)
-        if mf.latest_version(path) is not None:
-            assert sorted(mf.read_files(path)) == sorted(model_files)
+            vacuum_points(path, keep_versions=arg, min_age_seconds=0)
+        if obs.latest_version(store, "") is not None:
+            assert sorted(obs.read_files(store, "")) == sorted(model_files)
             for a, v in model_txn.items():
-                assert mf.read_txn(path, a) == v
+                assert obs.read_txn(store, "", a) == v
 
 
 @given(

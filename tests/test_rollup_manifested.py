@@ -2,10 +2,11 @@
 writes + compaction over the versioned-manifest CAS, safe on object stores
 where the flock path of `compact_rollup` has no primitive to stand on.
 
-Every test runs against BOTH manifest backends: the local POSIX protocol
-(`manifest.commit_cas`, store=None) and the object-store protocol
-(`objectstore.commit_cas` over MemoryObjectStore — conditional-PUT
-semantics, no filesystem atomicity anywhere in the commit path)."""
+Every test runs with the manifest in BOTH homes: beside the data
+(store=None — `objectstore.commit_cas` on a LocalFSObjectStore at the
+table directory) and in an object store (MemoryObjectStore —
+conditional-PUT semantics, no filesystem atomicity anywhere in the commit
+path)."""
 
 from __future__ import annotations
 
@@ -39,16 +40,19 @@ def _mini_partial(spark, series: str, n: int):
 
 @pytest.fixture(params=["local", "store"])
 def backend(request):
-    """store=None → local manifest CAS; else the object-store protocol."""
+    """store=None → the manifest beside the data; else in an object store."""
     if request.param == "local":
         return lambda: None
     return lambda: obs.MemoryObjectStore()
 
 
 def _manifest_names(roll: str, store) -> list[str]:
-    from sydradb_spark.streaming.rollup_stream import _mf_files
+    from sydradb_spark.streaming.rollup_stream import STORE_TABLE
 
-    return sorted(_mf_files(roll, store) or [])
+    mstore, key = obs.resolve(roll, store, STORE_TABLE)
+    if obs.latest_version(mstore, key) is None:
+        return []
+    return sorted(obs.read_files(mstore, key))
 
 
 def test_manifested_write_and_read(spark, tmp_path, backend):
@@ -464,7 +468,7 @@ def test_init_rollup_manifest_adopts_flock_table(spark, tmp_path, backend):
 
 def test_manifested_uri_paths_guarded_and_hadoop_routed(spark, tmp_path, monkeypatch):
     """r13 review findings: (a) store=None + a URI rollup path must be
-    REJECTED — the local link-CAS would mkdir relative 's3a:/...' junk;
+    REJECTED — a manifest beside the data would mkdir relative 's3a:/...' junk;
     (b) with a store, vacuum/cleanup on a URI DATA location must route
     through the Hadoop FileSystem API instead of crashing on
     Path('s3a://...').iterdir() or silently no-op'ing shutil. Simulated by

@@ -662,7 +662,7 @@ def test_stream_sink_maintenance_prunes_manifest_versions(spark, tmp_path):
     """A continuous stream must not accumulate manifest versions forever:
     with maintenance_every set, the sink vacuums old version files while
     the data (append-only, always referenced by LATEST) stays intact."""
-    from sydradb_spark import manifest as mf
+    from sydradb_spark import objectstore as obs
     from sydradb_spark.ingest import NDJSON_SCHEMA, parse_ndjson, stream_points_sink
     from sydradb_spark.storage import read_points
 
@@ -695,7 +695,7 @@ def test_stream_sink_maintenance_prunes_manifest_versions(spark, tmp_path):
     # data intact, replay guard intact
     assert read_points(spark, table).count() == 5
     app_id = (tmp_path / "ck" / "_sydra_app_id").read_text().strip()
-    assert mf.read_txn(table, app_id) == 4
+    assert obs.read_txn(obs.LocalFSObjectStore(table), "", app_id) == 4
 
 
 def test_stream_rollup_replay_is_idempotent(spark, tmp_path):
@@ -940,7 +940,7 @@ def test_stream_sink_lazy_spark_metadata_app_id(spark, tmp_path, monkeypatch):
     it does on a URI checkpoint) — patching _posix_checkpoint_path itself
     would also poison the TABLE-path triage storage shares since r14."""
     from sydradb_spark import ingest
-    from sydradb_spark import manifest as mf
+    from sydradb_spark import objectstore as obs
     from sydradb_spark.ingest import NDJSON_SCHEMA, parse_ndjson, stream_points_sink
     from sydradb_spark.storage import read_points
 
@@ -975,7 +975,7 @@ def test_stream_sink_lazy_spark_metadata_app_id(spark, tmp_path, monkeypatch):
         (pathlib.Path(ck) / "metadata").read_text()
     )["id"]
     assert ingest.spark_checkpoint_metadata_id(spark, "file://" + ck) == meta_id
-    assert mf.read_txn(table, meta_id) == 0
+    assert obs.read_txn(obs.LocalFSObjectStore(table), "", meta_id) == 0
 
 
 def test_stream_rollup_crash_replay_converges(spark, tmp_path):
@@ -1015,9 +1015,9 @@ def test_two_streams_append_same_table_concurrently(spark, tmp_path):
     """Two live streams (distinct checkpoints → distinct app ids) append to
     ONE points table at the same time: the manifest CAS must lose no
     appends across the interleaved commits, and each app's txn ledger must
-    advance independently (multi-writer claim of manifest.commit, here
+    advance independently (multi-writer claim of commit_cas, here
     exercised through the real streaming sink rather than bare threads)."""
-    from sydradb_spark import manifest as mf
+    from sydradb_spark import objectstore as obs
     from sydradb_spark.ingest import NDJSON_SCHEMA, parse_ndjson, stream_points_sink
     from sydradb_spark.storage import read_points
 
@@ -1053,7 +1053,8 @@ def test_two_streams_append_same_table_concurrently(spark, tmp_path):
         (Path(str(tmp_path / f"ck_{app}")) / "_sydra_app_id").read_text().strip()
         for app in ("a", "b")
     ]
-    assert mf.read_txn(table, ids[0]) == 3 and mf.read_txn(table, ids[1]) == 2
+    ledger = obs.read_ledger(obs.LocalFSObjectStore(table), "")
+    assert ledger[ids[0]] == 3 and ledger[ids[1]] == 2
 
 
 def test_rollup_lock_skips_non_posix_uri(tmp_path, monkeypatch):
